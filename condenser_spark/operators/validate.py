@@ -28,11 +28,17 @@ def referential_violations(
     match in the destination parent.  All-zero == the subset is referentially
     closed: the Spark analogue of constraints applying cleanly.
 
-    All per-edge orphan counts are unioned into ONE plan and collected in ONE
-    Spark job — per-edge sequential ``count()`` calls serialize on the driver
-    and, under lazy materialization, re-execute each table's lineage per edge
-    (VERDICT r1 "what's wrong" #4).  Broadcast of the parent key side is left
-    to AQE (a forced hint OOMs on large parents at scale)."""
+    Every edge's orphans are tagged with the edge's index and unioned into
+    ONE plan, counted by a single ``groupBy`` and collected by one action —
+    per-edge sequential ``count()`` calls serialize on the driver and, under
+    lazy materialization, re-execute each table's lineage per edge (VERDICT
+    r1 "what's wrong" #4).  The parent key side is not deduplicated: a LEFT
+    ANTI join drops a child row on its first match whatever the build-side
+    duplicates (the argument :func:`semi_join_keys` documents), while a
+    ``distinct()`` per edge adds a shuffle that AQE runs as separate jobs.
+    Edges with no orphans have no group and default to 0.  Broadcast of the
+    parent key side is left to AQE (a forced hint OOMs on large parents at
+    scale)."""
     applicable = [
         rel
         for rel in relationships
@@ -40,27 +46,33 @@ def referential_violations(
     ]
     if not applicable:
         return {}
-    branches = []
-    for i, rel in enumerate(applicable):
+    counts = {
+        r.edge_idx: r.orphans
+        for r in _orphan_counts(dest, applicable).collect()
+    }
+    return {rel: counts.get(i, 0) for i, rel in enumerate(applicable)}
+
+
+def _orphan_counts(
+    dest: Mapping[str, DataFrame], edges: Sequence[Relationship]
+) -> DataFrame:
+    """``(edge_idx, orphans)`` for every edge of ``edges`` with orphans."""
+    tagged = None
+    for i, rel in enumerate(edges):
         child = dest[rel.fk_table].na.drop(subset=list(rel.fk_columns))
+        # fresh key names: on a self-referencing edge (fk_table ==
+        # target_table) the parent's own columns would be ambiguous
+        keys = [f"_pk{j}" for j in range(len(rel.target_columns))]
         parent = dest[rel.target_table].select(
-            *[F.col(c) for c in rel.target_columns]
+            *[F.col(c).alias(k) for c, k in zip(rel.target_columns, keys)]
         )
         orphans = child.join(
-            parent.distinct(),
-            on=_cond(child, parent, rel.fk_columns, rel.target_columns),
+            parent,
+            on=_cond(child, parent, rel.fk_columns, keys),
             how="left_anti",
-        )
-        branches.append(
-            orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
-                F.lit(i).alias("edge_idx"), "orphans"
-            )
-        )
-    unioned = branches[0]
-    for b in branches[1:]:
-        unioned = unioned.unionByName(b)
-    counts = {r.edge_idx: r.orphans for r in unioned.collect()}
-    return {rel: counts[i] for i, rel in enumerate(applicable)}
+        ).select(F.lit(i).alias("edge_idx"))
+        tagged = orphans if tagged is None else tagged.unionByName(orphans)
+    return tagged.groupBy("edge_idx").agg(F.count(F.lit(1)).alias("orphans"))
 
 
 def tabulate(

@@ -12,8 +12,10 @@ import os
 from typing import Iterable
 
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from condenser_spark.session import ensure_compat
 
@@ -39,6 +41,10 @@ TABLE_NAMES: tuple[str, ...] = (
 # "two RDBMS dialects" concern becomes a format concern on Spark)
 SOURCE_FORMATS: tuple[str, ...] = ("parquet", "csv", "json", "orc")
 
+# spark.sql.parquet.mergeSchema: when true, Spark merges EVERY footer's schema
+MERGE_SCHEMA_CONF = "spark.sql.parquet.mergeSchema"
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
 
 def load_source_tables(
     spark: SparkSession,
@@ -56,6 +62,12 @@ def load_source_tables(
     ``source_format``: parquet (default; pushdown + pruning + self-describing
     schema), csv (header + schema inference — inference scans once; supply
     parquet for 100 TB), json (schema-inferred lines), or orc.
+
+    Parquet schemas are read on the driver from the footer Spark's inference
+    would read (:func:`_footer_file`) and passed explicitly, so registering a
+    parquet source runs no Spark job.  With ``spark.sql.parquet.mergeSchema``
+    set, or when a table has no data file, ``spark.read.parquet`` infers
+    instead (merging every footer, or raising Spark's own error).
     """
     if source_format not in SOURCE_FORMATS:
         raise ValueError(
@@ -71,58 +83,133 @@ def load_source_tables(
         )
         tables = found or list(TABLE_NAMES)
     excluded = set(excluded_tables)
+    names = [n for n in tables if n not in excluded]
+    if source_format != "parquet":
+        opts = {"header": True, "inferSchema": True} \
+            if source_format == "csv" else {}
+        return {
+            n: spark.read.load(os.path.join(source_dir, f"{n}{suffix}"),
+                               format=source_format, **opts)
+            for n in names
+        }
+    # mergeSchema needs every footer: only Spark's own inference job merges them
+    merge = spark.conf.get(MERGE_SCHEMA_CONF, "false").lower() == "true"
+    read_parquet = None if merge else _footer_reader(spark)
     out: dict[str, DataFrame] = {}
-    for name in tables:
-        if name in excluded:
-            continue
+    for name in names:
         path = os.path.join(source_dir, f"{name}{suffix}")
-        if source_format == "csv":
-            df = spark.read.csv(path, header=True, inferSchema=True)
-        elif source_format == "json":
-            df = spark.read.json(path)
-        elif source_format == "orc":
-            df = spark.read.orc(path)
-        else:
+        footer = _footer_file(path)
+        df = read_parquet(path, footer) if read_parquet and footer else None
+        if df is None:
+            # no data file (or an unreadable one): Spark infers and raises
             df = spark.read.parquet(path)
-        if source_format != "parquet":
-            out[name] = df
-            continue
-        # timestamp[ns] parquet columns surface as long (see session.NANOS_CONF);
-        # restore them as microsecond timestamp_ntz — the same precision DuckDB
-        # and pandas use, so oracles agree.  Footer-only introspection: O(KB).
-        arrow_schema = _footer_schema(path)
-        if arrow_schema is None:
-            out[name] = df
-            continue
-        for field in arrow_schema:
-            if str(field.type) == "timestamp[ns]":
-                # floor division, not `div` (which truncates toward zero):
-                # pre-1970 nanos must round DOWN to match DuckDB/pandas ns->us
-                df = df.withColumn(
-                    field.name,
-                    F.expr(
-                        f"cast(timestamp_micros({field.name} div 1000 + "
-                        f"(case when {field.name} % 1000 < 0 then -1 else 0 end)) "
-                        "as timestamp_ntz)"
-                    ),
-                )
-        out[name] = df
+        out[name] = _nanos_to_timestamp(df, footer)
     return out
 
 
-def _footer_schema(path: str):
-    """Arrow schema from a parquet file OR a Spark-written dataset directory
-    (first part file's footer — all parts share one schema).  None when the
-    dataset is empty of part files."""
-    if os.path.isdir(path):
-        parts = sorted(
-            f for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not parts:
+def _hidden(name: str) -> bool:
+    """Spark's file-listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    names starting with ``.`` or ``_`` are skipped, except the parquet summary
+    files and ``_x=...`` partition directories."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(_SUMMARY_FILES)
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer ``spark.read.parquet(path)`` infers its schema
+    from (``ParquetUtils.inferSchema`` without mergeSchema): a
+    ``_common_metadata`` summary, else ``_metadata``, else the first data
+    file in path order.  None when the dataset holds no such file."""
+    if not os.path.isdir(path):
+        return path if os.path.isfile(path) else None
+    data: list[str] = []
+    summaries: dict[str, list[str]] = {}
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if _hidden(f):
+                continue
+            full = os.path.join(root, f)
+            if f in _SUMMARY_FILES:
+                summaries.setdefault(f, []).append(full)
+            else:
+                data.append(full)
+    for kind in _SUMMARY_FILES:
+        if kind in summaries:
+            return min(summaries[kind])
+    return min(data, default=None)
+
+
+def _footer_reader(spark: SparkSession):
+    """``read(path, footer) -> DataFrame | None``: ``path`` read with the
+    schema Spark's inference would derive from ``footer``, converted on the
+    driver by Spark's own ``ParquetFileFormat.readSchemaFromFooter``.  No
+    Spark job runs: ``spark.read.parquet`` launches a one-task
+    schema-inference job per table.  The class handles and the converter are
+    resolved once here, not per table (py4j round trips dominated the
+    per-table cost).  Returns None when the footer cannot be read, so the
+    caller lets Spark raise its own error."""
+    jvm = spark._jvm
+    jspark = spark._jsparkSession
+    state = jspark.sessionState()
+    hconf = state.newHadoopConf()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = parquet.ParquetToSparkSchemaConverter(state.conf())
+    from_footer = parquet.ParquetFileFormat.readSchemaFromFooter
+    read_footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter
+    skip_row_groups = (
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    Footer = jvm.org.apache.parquet.hadoop.Footer
+    Path = jvm.org.apache.hadoop.fs.Path
+
+    def read(path: str, footer: str) -> DataFrame | None:
+        try:
+            jpath = Path(footer)
+            schema = from_footer(
+                Footer(jpath, read_footer(hconf, jpath, skip_row_groups)),
+                converter)
+        except Py4JJavaError:
             return None
-        return pq.read_schema(os.path.join(path, parts[0]))
-    return pq.read_schema(path)
+        return DataFrame(
+            jspark.read().format("parquet").schema(schema).load(path), spark)
+
+    return read
+
+
+def _nanos_to_timestamp(df: DataFrame, footer: str | None) -> DataFrame:
+    """INT64 TIMESTAMP(NANOS) parquet columns surface as long (see
+    session.NANOS_CONF); restore them as microsecond timestamp_ntz — the same
+    precision DuckDB and pandas use, so oracles agree.  Only columns that are
+    ``timestamp[ns]`` in the footer AND long in Spark: pyarrow also reports
+    INT96 (Spark's own timestamp encoding) as ``timestamp[ns]``, but Spark
+    reads those as TIMESTAMP already.  Footer-only introspection: O(KB)."""
+    if footer is None:
+        return df
+    nanos = [f.name for f in pq.read_schema(footer)
+             if str(f.type) == "timestamp[ns]"]
+    if not nanos:
+        return df
+    longs = {f.name for f in df.schema.fields
+             if isinstance(f.dataType, LongType)}
+    for c in nanos:
+        if c not in longs:
+            continue
+        # floor division, not `div` (which truncates toward zero):
+        # pre-1970 nanos must round DOWN to match DuckDB/pandas ns->us
+        df = df.withColumn(
+            c,
+            F.expr(
+                f"cast(timestamp_micros({c} div 1000 + "
+                f"(case when {c} % 1000 < 0 then -1 else 0 end)) "
+                "as timestamp_ntz)"
+            ),
+        )
+    return df
 
 
 def empty_like(df: DataFrame) -> DataFrame:
@@ -150,17 +237,26 @@ def lookup_df(spark: SparkSession, data, schema) -> DataFrame:
     r18) and the cost grows with the cluster.  Routing the rows through
     pandas hits the Arrow conversion path, which plans a LocalRelation —
     zero scan tasks, and the optimizer can fold it.  Falls back to the
-    plain path for values pandas/Arrow can't represent."""
-    import pandas as _pd
+    plain path for values pandas/Arrow can't represent, and when pandas is
+    not installed.
 
+    The pandas frame holds ``object`` columns, so values reach Arrow as the
+    Python objects they are: a numeric pandas column would turn an int
+    column holding ``None`` into float64 (2**60 + 1 becomes 2**60).  A
+    column-name list is given the schema ``createDataFrame(data, names)``
+    would infer (an int column with a ``None`` stays long, not double)."""
     data = list(data)
     if not data:
         return spark.createDataFrame(data, schema)
     try:
+        import pandas as _pd
+
+        names = None
         if isinstance(schema, (list, tuple)):
-            pdf = _pd.DataFrame(data, columns=list(schema))
-            return spark.createDataFrame(pdf)
-        return spark.createDataFrame(_pd.DataFrame(data), schema=schema)
+            names = list(schema)
+            schema = spark._inferSchemaFromList(data, names=names)
+        pdf = _pd.DataFrame(data, columns=names, dtype=object)
+        return spark.createDataFrame(pdf, schema=schema)
     except Exception:
         return spark.createDataFrame(data, schema)
 

@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 # reader rejects INT64(TIMESTAMP(NANOS)) unless told to surface it as a long;
 # the loader (registry.load_source_tables) then casts nanos -> timestamp_ntz.
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
 
 
 def get_spark(
@@ -32,7 +33,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(NANOS_CONF, "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(ARROW_CONF, "true")
         # wide aggregates (128-permutation MinHash, 64-bit SimHash votes) fall
         # out of whole-stage codegen at the default 100-field cap — measured 3x
         # slower interpreted
@@ -48,3 +49,6 @@ def ensure_compat(spark: SparkSession) -> None:
     spark.conf.set(NANOS_CONF, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.codegen.maxFields", "256")
+    # registry.lookup_df plans driver-local frames as LocalRelations only on
+    # the Arrow path; the conf defaults to false
+    spark.conf.set(ARROW_CONF, "true")

@@ -747,3 +747,50 @@ def test_kn_trigram_scoring_plan_shape(spark, source):
     n_py = sum(("ArrowEvalPython" in l) or ("BatchEvalPython" in l)
                or ("MapInPandas" in l) for l in plan.splitlines())
     assert n_py == 0, plan
+
+
+def _build_sides(plan: str, join_marker: str) -> list[list[str]]:
+    """Lines of the build (right, last-child) subtree of every join line
+    containing ``join_marker`` in a plan tree string."""
+    lines = plan.splitlines()
+    sides = []
+    for i, line in enumerate(lines):
+        if join_marker not in line:
+            continue
+        col = len(line) - len(line.lstrip(" :|+-"))  # where the node starts
+        below = []
+        for nxt in lines[i + 1:]:
+            if len(nxt) <= col or nxt[:col].strip(" :|"):
+                break
+            below.append(nxt)
+        build = [j for j, nxt in enumerate(below) if nxt[col:col + 3] == "+- "]
+        sides.append(below[build[-1]:] if build else [])
+    return sides
+
+
+def test_referential_violations_parent_side_is_not_aggregated(spark, source):
+    """referential_violations used to ``distinct()`` every edge's parent
+    keys: one extra shuffle per edge, each run by AQE as its own jobs.  A
+    LEFT ANTI join ignores build-side duplicates, so no aggregate may sit on
+    any edge's parent-key side; the only aggregate is the one groupBy."""
+    from condenser_spark.config import Relationship
+    from condenser_spark.operators.validate import _orphan_counts
+
+    def edge(child, fk, parent, pk):
+        return Relationship(fk_table=child, fk_columns=(fk,),
+                            target_table=parent, target_columns=(pk,))
+
+    dest = dict(source)
+    # a sampled parent leaves orphans, so the final plan stays physical
+    dest["orders"] = source["orders"].filter(F.col("o_orderkey") % 10 == 0)
+    edges = [edge("lineitem", "l_orderkey", "orders", "o_orderkey"),
+             edge("orders", "o_custkey", "customer", "c_custkey"),
+             edge("customer", "c_nationkey", "nation", "n_nationkey")]
+    plan = _executed(_orphan_counts(dest, edges))
+    final = plan.split("== Initial Plan ==")[0]
+    sides = _build_sides(final, "LeftAnti")
+    assert len(sides) == len(edges), final
+    for side in sides:
+        assert side and "Scan parquet" in "\n".join(side), final
+        assert not any("Aggregate" in line for line in side), "\n".join(side)
+    assert final.count("HashAggregate(") == 2, final  # partial + final

@@ -1,13 +1,9 @@
 """Round-2 regression tests for the judge/advisor findings (VERDICT.md r1,
-ADVICE.md r1): short-document shingling, union-find path compression,
-pre-1970 nanosecond timestamp flooring, and destructive-hook handling."""
+ADVICE.md r1): short-document shingling, union-find path compression and
+destructive-hook handling (pre-1970 nanosecond timestamp flooring lives in
+test_registry.py)."""
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as paq
 import pytest
-from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------- short-doc shingles
@@ -62,30 +58,6 @@ def test_union_find_path_compression():
     # after find, every node on the path points DIRECTLY at the root
     assert uf._roots[d] == uf._id["a"]
     assert all(uf._roots[uf._id[e]] == uf._id["a"] for e in "abcd")
-
-
-# ---------------------------------------------- pre-1970 ns timestamp flooring
-
-def test_nanos_floor_pre_1970(spark, tmp_path):
-    from condenser_spark.registry import load_source_tables
-
-    # -1500 ns and +1500 ns: floor to -2 us / +1 us (ns->us must round DOWN,
-    # matching DuckDB/pandas; truncation toward zero gives -1 us — off by 1)
-    tbl = pa.table(
-        {
-            "event_id": pa.array([1, 2], pa.int64()),
-            "ts": pa.array([-1500, 1500], pa.timestamp("ns")),
-        }
-    )
-    paq.write_table(tbl, os.path.join(tmp_path, "events.parquet"))
-    out = load_source_tables(spark, str(tmp_path), tables=["events"])
-    got = {
-        r.event_id: r.micros
-        for r in out["events"]
-        .select("event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("micros"))
-        .collect()
-    }
-    assert got == {1: -2, 2: 1}
 
 
 # --------------------------------------------------------------- hook behavior
