@@ -87,8 +87,11 @@ def main(argv: list[str] | None = None,
             for t, df in eng.dest.items():
                 if not os.path.exists(os.path.join(args.dest, f"{t}.parquet")):
                     write_dest({t: df}, args.dest)
-        # A3 tabulation (/root/reference/result_tabulator.py:6-22)
-        for row in eng.report().orderBy("table_name").collect():
+        # A3 tabulation (/root/reference/result_tabulator.py:6-22); sorted
+        # here, since a global sort plans a range exchange even over the
+        # report's LocalRelation
+        rows = sorted(eng.report().collect(), key=lambda r: r.table_name)
+        for row in rows:
             print(f"{row.table_name}: {row.source_count} -> {row.dest_count} "
                   f"({row.percent:.2f}%)")
         eng.cleanup()

@@ -7,7 +7,8 @@ errors.  Parquet enforces nothing, so S8 becomes an explicit anti-join orphan ch
 
 ``tabulate`` reproduces the final report (/root/reference/result_tabulator.py:6-22),
 with exact counts instead of the reference's catalog estimates
-(/root/reference/psql_database_helper.py:166-169).
+(/root/reference/psql_database_helper.py:166-169): parquet footers where the
+frame is a plain scan, one Spark aggregate for the rest.
 """
 
 from __future__ import annotations
@@ -16,6 +17,13 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from condenser_spark.config import Relationship
 from condenser_spark.operators.joins import _cond
@@ -75,6 +83,15 @@ def _orphan_counts(
     return tagged.groupBy("edge_idx").agg(F.count(F.lit(1)).alias("orphans"))
 
 
+# tabulate's output; the counts are never null (a table without rows counts 0)
+_REPORT_SCHEMA = StructType([
+    StructField("table_name", StringType()),
+    StructField("source_count", LongType(), False),
+    StructField("dest_count", LongType(), False),
+    StructField("percent", DoubleType()),
+])
+
+
 def tabulate(
     spark: SparkSession,
     source: Mapping[str, DataFrame],
@@ -83,23 +100,44 @@ def tabulate(
     """Per-table ``(table_name, source_count, dest_count, percent)`` report with the
     reference's zero-division guard (/root/reference/result_tabulator.py:6-22).
 
-    Returns one lazy plan shaped as ONE map-side-combined aggregate: every
-    table's rows project to a zero-column (name, side) tag and union into a
-    single ``groupBy(table_name)`` — one tiny exchange of per-partition
-    partial counts — then a broadcast join against the table-name list
-    restores tables whose source AND dest are both empty.  The earlier
-    2N-aggregate-branch union executed as one job too, but carried one
-    single-row exchange per branch (2N AQE stages of pure scheduling at
-    hundreds of tables); this shape is one exchange total, with identical
-    output values."""
-    names = sorted(source)
+    The reference reads its counts from catalog estimates
+    (``pg_class.reltuples``) and never scans a table.  Here the parquet
+    footers stand in for the catalog, and they are exact: every side that
+    :func:`~condenser_spark.registry.metadata_row_count` can count — a
+    parquet scan under projections only, or a local relation such as an
+    ``empty_like`` table — is counted on the driver when ``tabulate`` is
+    called, not when the returned frame is collected.  When every side is
+    countable the report is a LocalRelation and collecting it runs no
+    Spark job.
+
+    The other sides (filtered, limited, sampled, unioned, cached or
+    checkpointed frames, frames over more files than Spark lists on the
+    driver, unreadable footers) fall back to ONE map-side-combined
+    aggregate: each row projects to a zero-column (name, side) tag, the tags
+    union into a single ``groupBy(table_name)`` — one tiny exchange of
+    per-partition partial counts — and a broadcast join merges the result
+    into the driver-counted rows."""
+    from condenser_spark.registry import lookup_df, metadata_row_count
+
+    counted = []
     sides = []
-    for name in names:
-        sides.append(source[name].select(
-            F.lit(name).alias("table_name"), F.lit(True).alias("_src")))
-        if name in dest:
-            sides.append(dest[name].select(
-                F.lit(name).alias("table_name"), F.lit(False).alias("_src")))
+
+    def count(name: str, df: DataFrame, is_source: bool) -> int | None:
+        n = metadata_row_count(df)
+        if n is None:
+            sides.append(df.select(F.lit(name).alias("table_name"),
+                                   F.lit(is_source).alias("_src")))
+        return n
+
+    for name in sorted(source):
+        sc = count(name, source[name], True)
+        dc = count(name, dest[name], False) if name in dest else 0
+        counted.append((name, sc, dc))
+    if not sides:
+        return lookup_df(spark, [
+            (name, sc, dc, 100.0 * dc / sc if sc > 0 else 0.0)
+            for name, sc, dc in counted
+        ], _REPORT_SCHEMA)
     rows = sides[0]
     for s in sides[1:]:
         rows = rows.unionByName(s)
@@ -107,22 +145,21 @@ def tabulate(
         F.count(F.when(F.col("_src"), 1)).alias("_sc"),
         F.count(F.when(~F.col("_src"), 1)).alias("_dc"),
     )
-    from condenser_spark.registry import lookup_df
-
-    base = lookup_df(spark, [(n,) for n in names], "table_name string")
+    base = lookup_df(spark, counted, "table_name string, _msc long, _mdc long")
     return (
         base.join(F.broadcast(counts), on="table_name", how="left")
         .select(
             "table_name",
-            F.coalesce(F.col("_sc"), F.lit(0).cast("long"))
+            F.coalesce("_msc", "_sc", F.lit(0).cast("long"))
             .alias("source_count"),
-            F.coalesce(F.col("_dc"), F.lit(0).cast("long"))
+            F.coalesce("_mdc", "_dc", F.lit(0).cast("long"))
             .alias("dest_count"),
         )
         .select(
             "table_name",
             "source_count",
             "dest_count",
+            # the guard of the driver-side rows above, in Spark
             F.when(
                 F.col("source_count") > 0,
                 F.lit(100.0) * F.col("dest_count") / F.col("source_count"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 from typing import Iterable
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
@@ -227,6 +228,68 @@ def empty_like(df: DataFrame) -> DataFrame:
     return df.limit(0)
 
 
+# Spark lists files on the driver up to this many paths and with a job past
+# it; frames reading more files are left to Spark's own count
+FILE_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PARQUET = (
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat")
+
+
+def metadata_row_count(df: DataFrame) -> int | None:
+    """``df.count()`` read from metadata on the driver, or None.
+
+    Two plan shapes are counted without a Spark job: ``Project`` nodes over
+    a parquet scan (the sum of the footers' ``num_rows`` over the relation's
+    data files, which are the files Spark reads) and a ``LocalRelation``
+    (its row list, e.g. :func:`empty_like`).  Any other shape — a filter,
+    limit, sample, union, aggregate, cached or checkpointed frame, a DSv2 or
+    non-``file:`` source — returns None, as does a frame over more files
+    than Spark lists on the driver (:data:`FILE_THRESHOLD_CONF`) and a
+    footer that cannot be read (a corrupt file under
+    ``spark.sql.files.ignoreCorruptFiles`` is Spark's to skip)."""
+    qe = df._jdf.queryExecution()
+    # the analyzed plan with cached data substituted, unless the optimizer
+    # is needed to fold a limit(0) into a LocalRelation: optimizing a plain
+    # scan costs more than the rest of the count
+    plan = _below_projects(qe.withCachedData())
+    if plan.nodeName() != "LogicalRelation":
+        plan = _below_projects(qe.optimizedPlan())
+    kind = plan.nodeName()
+    if kind == "LocalRelation":
+        return None if plan.isStreaming() else plan.data().size()
+    if kind != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getName() != _RELATION
+            or rel.fileFormat().getClass().getName() != _PARQUET):
+        return None
+    files = rel.inputFiles()
+    if len(files) > int(df.sparkSession.conf.get(FILE_THRESHOLD_CONF)):
+        return None
+    paths = []
+    for uri in files:
+        parsed = urlparse(uri)
+        if parsed.scheme != "file":
+            return None
+        # the listing keeps the summary files (for schema inference); the
+        # scan reads data files only (PartitioningAwareFileIndex.isDataPath)
+        name = os.path.basename(parsed.path)
+        if not (name.startswith(".")
+                or (name.startswith("_") and "=" not in name)):
+            paths.append(unquote(parsed.path))
+    try:
+        return sum(pq.read_metadata(p).num_rows for p in paths)
+    except Exception:
+        return None
+
+
+def _below_projects(plan):
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    return plan
+
+
 def lookup_df(spark: SparkSession, data, schema) -> DataFrame:
     """Small driver-local lookup frame (query lists, badword sets, blocked
     domains, report rows) as a plan-embedded LocalRelation.
@@ -235,10 +298,13 @@ def lookup_df(spark: SparkSession, data, schema) -> DataFrame:
     every broadcast build or join over the frame schedules one near-empty
     task PER CORE (~0.4 s of fixed overhead per use at local[32], measured
     r18) and the cost grows with the cluster.  Routing the rows through
-    pandas hits the Arrow conversion path, which plans a LocalRelation —
-    zero scan tasks, and the optimizer can fold it.  Falls back to the
-    plain path for values pandas/Arrow can't represent, and when pandas is
-    not installed.
+    pandas to the Arrow conversion plans a LocalRelation — zero scan tasks,
+    and the optimizer can fold it.  The conversion is called directly, not
+    through ``createDataFrame``, which takes it only when
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set: a session that
+    never called ``ensure_compat`` gets a LocalRelation too.  Falls back to
+    the plain path for values pandas/Arrow can't represent, and when pandas
+    is not installed.
 
     The pandas frame holds ``object`` columns, so values reach Arrow as the
     Python objects they are: a numeric pandas column would turn an int
@@ -255,8 +321,11 @@ def lookup_df(spark: SparkSession, data, schema) -> DataFrame:
         if isinstance(schema, (list, tuple)):
             names = list(schema)
             schema = spark._inferSchemaFromList(data, names=names)
+        elif isinstance(schema, str):
+            schema = spark._parse_ddl(schema)
         pdf = _pd.DataFrame(data, columns=names, dtype=object)
-        return spark.createDataFrame(pdf, schema=schema)
+        return spark._create_from_pandas_with_arrow(
+            pdf, schema, spark._jconf.sessionLocalTimeZone())
     except Exception:
         return spark.createDataFrame(data, schema)
 

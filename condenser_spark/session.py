@@ -49,6 +49,6 @@ def ensure_compat(spark: SparkSession) -> None:
     spark.conf.set(NANOS_CONF, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.codegen.maxFields", "256")
-    # registry.lookup_df plans driver-local frames as LocalRelations only on
-    # the Arrow path; the conf defaults to false
+    # toPandas() (the bloom-key and shingle-sample collects) transfers
+    # through Arrow only with this conf; it defaults to false
     spark.conf.set(ARROW_CONF, "true")

@@ -47,3 +47,17 @@ def normalize_event_ts(df):
     if isinstance(df.schema["ts"].dataType, LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def jobs_in_group(spark, group, fn):
+    """``(fn(), ids of the Spark jobs it ran)``, counted under job group
+    ``group`` with ``statusTracker`` (works with the UI off).  Use a group
+    name no other test uses."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

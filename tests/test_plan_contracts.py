@@ -794,3 +794,24 @@ def test_referential_violations_parent_side_is_not_aggregated(spark, source):
         assert side and "Scan parquet" in "\n".join(side), final
         assert not any("Aggregate" in line for line in side), "\n".join(side)
     assert final.count("HashAggregate(") == 2, final  # partial + final
+
+
+def test_tabulate_of_countable_frames_plans_no_scan(spark, source):
+    """When every side is a parquet scan or an ``empty_like`` frame,
+    tabulate reads the counts from parquet footers on the driver: the
+    report is a LocalRelation, with no file scan, union or aggregate (the
+    Spark aggregate is only for frames metadata cannot count)."""
+    from condenser_spark.operators.validate import tabulate
+    from condenser_spark.registry import empty_like
+
+    dest = {t: empty_like(df) for t, df in source.items()}
+    dest["orders"] = source["orders"]
+    qe = tabulate(spark, source, dest)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert optimized.startswith("LocalRelation"), optimized
+    for node in ("Relation", "Union", "Aggregate", "Join"):
+        assert f"{node} " not in optimized.replace("LocalRelation", ""), \
+            optimized
+    physical = qe.executedPlan().toString()
+    assert "LocalTableScan" in physical and "FileScan" not in physical, \
+        physical

@@ -18,7 +18,7 @@ from condenser_spark.registry import (
     write_dest_partitioned,
 )
 from condenser_spark.session import ARROW_CONF, ensure_compat
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_in_group
 
 # the fixture scales live side by side (TESTDATA.md)
 FIXTURES_ROOT = os.path.dirname(SF_DIR)
@@ -49,17 +49,6 @@ def _first_file(path):
             if f.endswith(".parquet") and not f.startswith((".", "_")):
                 return os.path.join(root, f)
     raise AssertionError(f"no data file under {path}")
-
-
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _assert_loads_as_inferred(spark, source_dir, tables=None):
@@ -213,12 +202,12 @@ def test_dataset_without_data_files_raises_sparks_error(spark, tmp_path):
 # ----------------------------------------------------------------- no jobs
 
 def test_parquet_load_launches_zero_jobs(spark, sf_dir):
-    loaded, jobs = _jobs_in_group(
+    loaded, jobs = jobs_in_group(
         spark, "test-registry-load", lambda: load_source_tables(spark, sf_dir))
     assert len(loaded) == 10
     assert jobs == []
     # the counter sees the per-table inference job this load avoids
-    _, inferred = _jobs_in_group(
+    _, inferred = jobs_in_group(
         spark, "test-registry-infer",
         lambda: spark.read.parquet(os.path.join(sf_dir, "orders.parquet")))
     assert len(inferred) == 1
@@ -272,14 +261,19 @@ def test_lookup_df_without_pandas_takes_plain_path(spark, monkeypatch):
     assert [tuple(r) for r in df.collect()] == [(1, "a")]
 
 
-def test_ensure_compat_enables_local_relation_lookup(spark):
-    """A session built without ``get_spark`` has Arrow off by default, so
-    ``createDataFrame(pandas)`` parallelizes to an RDD; ``ensure_compat``
-    turns it on and lookup frames plan as LocalRelations again."""
+def test_lookup_df_is_local_relation_without_arrow_conf(spark):
+    """A session built without ``get_spark`` has the Arrow conf off by
+    default, where ``createDataFrame(pandas)`` parallelizes to an RDD;
+    ``lookup_df`` still plans a LocalRelation, and collecting it runs no
+    job.  ``ensure_compat`` still turns the conf on (``toPandas`` uses it)."""
     plain = spark.newSession()
     plain.conf.unset(ARROW_CONF)
     assert plain.conf.get(ARROW_CONF) == "false"
     rows = [(1, "a"), (2, "b")]
-    assert not _plans_local_relation(lookup_df(plain, rows, "k long, v string"))
+    df = lookup_df(plain, rows, "k long, v string")
+    assert _plans_local_relation(df)
+    got, jobs = jobs_in_group(plain, "test-lookup-no-arrow", df.collect)
+    assert [tuple(r) for r in got] == rows
+    assert jobs == []
     ensure_compat(plain)
-    assert _plans_local_relation(lookup_df(plain, rows, "k long, v string"))
+    assert plain.conf.get(ARROW_CONF) == "true"
