@@ -13,6 +13,17 @@ line-level cleaning before document filters (C4 §2.2), heuristics before
 model scores (CCNet), dedup before decontamination (shared shingle work,
 and eval overlap should be judged against the deduped corpus), selection
 last (DSIR §3: weights are computed on the cleaned distribution).
+
+Eleven per-document stages have ONE body each, shared with
+:func:`condenser_spark.streaming.curate.curate_stream`: domain_prior, html,
+normalize, badwords, c4, diversity, script, gopher, fineweb, code and pii
+(``_<stage>_stage`` below), each a join-free projection/filter.  The rest
+keep two forms because the batch algorithm differs: media/video, URL, line
+and substring dedup work over the whole corpus here (pairs, the
+``url_dedup`` aggregate, a self-join) and probe a landed index on a stream;
+the langid, quality and perplexity scorers explode and aggregate here and
+use per-row twins there; gopher_repetition defaults to the 7-rule SQL
+table here and to the 12-rule kernel there, which give different results.
 """
 
 from __future__ import annotations
@@ -105,6 +116,222 @@ def _resolve_perplexity_opts(perplexity_buckets: dict, lang_col: str):
         raise ValueError(f"keep buckets {bad} outside [0, {n_buckets})")
     return (lm, score_col, sorted(set(keep_idx)), n_buckets, group_col,
             mode, accuracy, thresholds)
+
+
+# Per-document stages shared by curate_corpus and streaming.curate_stream.
+# Each is ``(cur, opts, *, text_col, id_col) -> DataFrame``: one join-free
+# projection/filter over ``cur`` (stream-legal), returning the kept rows
+# with the input columns — id first where the rest rides a kernel's
+# ``keep_cols`` (see _hidden) — plus the dv_*/sc_* audit columns.
+# curate_corpus re-selects its input columns after each.
+
+def _stage_opts(opts) -> dict:
+    return dict(opts) if isinstance(opts, dict) else {}
+
+
+def _in_place_opts(stage: str, fn: str, opts) -> dict:
+    opts = _stage_opts(opts)
+    if opts.get("out_col") is not None:
+        raise ValueError(
+            f"{stage}={{'out_col': ...}} is not allowed in the chain "
+            f"(the schema-preservation contract); call {fn} directly to "
+            "add a column")
+    return opts
+
+
+def _hidden(cur, id_col):
+    """``cur`` with each non-id column under a private name, and the map
+    input name -> private name: a kernel's keep_cols passthrough then
+    cannot collide with its outputs (an input ``n_lines``, ``doc_ok`` or
+    ``n_tokens`` column)."""
+    names = {c: f"_keep_{i}" for i, c in enumerate(cur.columns)
+             if c != id_col}
+    return cur.select(id_col, *[F.col(c).alias(h)
+                                for c, h in names.items()]), names
+
+
+def _domain_prior_stage(cur, opts, *, text_col, id_col):
+    # NULL priors (no URL, or a domain absent from a stats= snapshot)
+    # PASS — the chain's survive-by-default rule
+    from condenser_spark.functions.urls import domain_prior
+
+    opts = dict(opts)
+    dp_kw = {k: opts.pop(k) for k in ("stats", "multi_suffixes")
+             if k in opts}
+    url_col = opts.pop("url_col", "url")
+    max_share = opts.pop("max_share", None)
+    min_docs = opts.pop("min_docs", None)
+    if opts or (max_share is None and min_docs is None):
+        raise ValueError(
+            "domain_prior= takes max_share and/or min_docs (at "
+            "least one) plus stats/url_col/multi_suffixes; got "
+            f"unknown/empty: {sorted(opts) or '{}'}")
+    cond = F.lit(True)
+    if max_share is not None:
+        cond = cond & (F.col("domain_doc_share").isNull()
+                       | (F.col("domain_doc_share") <= float(max_share)))
+    if min_docs is not None:
+        cond = cond & (F.col("domain_n_docs").isNull()
+                       | (F.col("domain_n_docs") >= int(min_docs)))
+    return (domain_prior(cur, url_col, **dp_kw).filter(cond)
+            .select(*cur.columns))
+
+
+def _html_stage(cur, opts, *, text_col, id_col):
+    # a scalar pandas_udf per row; REPLACES text_col in place
+    from condenser_spark.functions.html import extract_html_text
+
+    opts = _in_place_opts("html", "extract_html_text", opts)
+    return extract_html_text(cur, text_col=text_col, **opts)
+
+
+def _normalize_stage(cur, opts, *, text_col, id_col):
+    # a scalar Arrow kernel per row; REPLACES text_col in place
+    from condenser_spark.functions.text import normalize_text
+
+    opts = _in_place_opts("normalize", "normalize_text", opts)
+    return normalize_text(cur, text_col=text_col, **opts)
+
+
+def _badwords_stage(cur, opts, *, text_col, id_col):
+    # one codegen alternation regex riding the scan (the past-cap
+    # token-join regime is batch-only; curate_stream guards it)
+    from condenser_spark.functions.text import badwords_flags
+
+    opts = dict(opts) if isinstance(opts, dict) else {"badwords": opts}
+    flagged = badwords_flags(cur, text_col=text_col, id_col=id_col, **opts)
+    return flagged.filter(~F.col("badwords_hit")).drop("badwords_hit")
+
+
+def _c4_stage(cur, opts, *, text_col, id_col):
+    from condenser_spark.functions.text import c4_clean, c4_pass_condition
+
+    opts = _stage_opts(opts)
+    # gate FIRST on the self-contained doc_ok condition (the
+    # gopher_pass_condition twin): doc_ok depends only on the stage-input
+    # text, so filtering before the cleaning projection keeps the row set
+    # while (a) dropped docs never pay the text_clean rebuild and (b) no
+    # ``filter("doc_ok")`` alias remains for Catalyst to substitute down
+    # into an interpreted Filter above the Arrow kernels
+    hid, names = _hidden(
+        cur.filter(c4_pass_condition(text_col=text_col, **opts)), id_col)
+    text = names.pop(text_col)
+    cleaned = c4_clean(hid, text_col=text, id_col=id_col,
+                       keep_cols=tuple(names.values()), **opts)
+    return cleaned.select(id_col, F.col("text_clean").alias(text_col),
+                          *[F.col(h).alias(c) for c, h in names.items()])
+
+
+def _diversity_stage(cur, opts, *, text_col, id_col):
+    # per-doc distinct-n ratios (Li et al. 2016) from the stateless kernel,
+    # thresholded; there is no published universal threshold, so the
+    # caller picks.  A doc too short to HAVE an n-gram of length n (ratio
+    # NULL) passes: no repetition evidence.
+    from condenser_spark.streaming.textdedup import diversity_stats_stateless
+
+    opts = dict(opts)
+    thresholds = {
+        n: float(opts.pop(f"min_ratio_{n}"))
+        for n in (1, 2, 3) if f"min_ratio_{n}" in opts
+    }
+    if opts or not thresholds:
+        raise ValueError(
+            "diversity= takes min_ratio_1/min_ratio_2/min_ratio_3 "
+            f"(at least one); got unknown/empty: {sorted(opts) or '{}'}")
+    hid, names = _hidden(cur, id_col)
+    stats = diversity_stats_stateless(hid, text_col=names[text_col],
+                                      id_col=id_col,
+                                      keep_cols=tuple(names.values()))
+    cond = F.lit(True)
+    for n, t in sorted(thresholds.items()):
+        r = F.col(f"ratio_{n}")
+        cond = cond & (r.isNull() | (r >= F.lit(t)))
+    return stats.filter(cond).select(
+        id_col, *[F.col(h).alias(c) for c, h in names.items()],
+        F.col("n_tokens").alias("dv_n_tokens"),
+        *[F.col(f"distinct_{n}").alias(f"dv_distinct_{n}")
+          for n in (1, 2, 3)],
+        *[F.col(f"ratio_{n}").alias(f"dv_ratio_{n}") for n in (1, 2, 3)],
+    )
+
+
+def _script_stage(cur, opts, *, text_col, id_col):
+    # mixed-script spam gate (the CCNet pre-langid slot): pure codegen
+    from condenser_spark.functions.langid import _SCRIPTS, script_gate_parts
+
+    keep = tuple(c for c in cur.columns if c != id_col)
+    stats, cond = script_gate_parts(cur, opts, text_col=text_col,
+                                    id_col=id_col, keep_cols=keep)
+    return stats.filter(cond).select(
+        id_col, *keep, "sc_n_chars",
+        *[f"sc_{stem}_frac" for stem, _ in _SCRIPTS], "sc_other_frac")
+
+
+def _gopher_stage(cur, opts, *, text_col, id_col):
+    # the substitution-proof single-expression form: a flags-then-filter
+    # gate gets its predicate alias-substituted into one interpreted
+    # Filter above the rewrite kernels with the tokenize subtree
+    # re-inlined ~14x (measured 2.34 -> 0.42 s at sf0.1);
+    # gopher_pass_condition binds the arrays once as lambda variables
+    from condenser_spark.functions.text import gopher_pass_condition
+
+    keep = tuple(c for c in cur.columns if c != id_col)
+    return (cur.filter(gopher_pass_condition(text_col=text_col,
+                                             **_stage_opts(opts)))
+            .select(id_col, *keep))
+
+
+def _fineweb_stage(cur, opts, *, text_col, id_col):
+    # one Arrow kernel per row, equal row for row to the per-line groupBy
+    # of functions.text.fineweb_quality_flags
+    from condenser_spark.streaming.textdedup import fineweb_quality_stateless
+
+    hid, names = _hidden(cur, id_col)
+    flagged = fineweb_quality_stateless(
+        hid, text_col=names[text_col], id_col=id_col,
+        keep_cols=tuple(names.values()), **_stage_opts(opts))
+    return flagged.filter(F.col("fineweb_pass")).select(
+        id_col, *[F.col(h).alias(c) for c, h in names.items()])
+
+
+def _gopher_repetition_stage(cur, opts, *, text_col, id_col):
+    # all 12 A1.2 rules in one Arrow kernel per row (STRESS 27: faster
+    # than the batch five-shuffle aggregate over its 7)
+    from condenser_spark.streaming.textdedup import (
+        gopher_repetition_stateless,
+    )
+
+    hid, names = _hidden(cur, id_col)
+    flagged = gopher_repetition_stateless(
+        hid, text_col=names[text_col], id_col=id_col,
+        keep_cols=tuple(names.values()), **_stage_opts(opts))
+    return flagged.filter(F.col("gopher_rep_pass")).select(
+        id_col, *[F.col(h).alias(c) for c, h in names.items()])
+
+
+def _code_stage(cur, opts, *, text_col, id_col):
+    # The Stack's code-corpus rules (Kocetkov 2022 §2.3): pure codegen,
+    # cq_-prefixed stats so a passthrough n_chars cannot shadow one
+    from condenser_spark.functions.text import code_quality_flags
+
+    keep = tuple(c for c in cur.columns if c != id_col)
+    flagged = code_quality_flags(cur, text_col=text_col, id_col=id_col,
+                                 keep_cols=keep, out_prefix="cq_",
+                                 **_stage_opts(opts))
+    return flagged.filter(F.col("cq_code_pass")).select(id_col, *keep)
+
+
+def _pii_stage(cur, opts, *, text_col, id_col):
+    # pure regexp_replace codegen; rewrites text_col in place
+    from condenser_spark.functions.pii import redact_pii
+
+    opts = _stage_opts(opts)
+    if opts.pop("counts", False):
+        raise ValueError(
+            "pii={'counts': True} is not allowed in the chain (the "
+            "schema-preservation contract); call redact_pii "
+            "directly for the audit columns")
+    return redact_pii(cur, text_col=text_col, **opts)
 
 
 def curate_corpus(
@@ -342,7 +569,12 @@ def curate_corpus(
     the custom stage.
 
     Every stage preserves the input schema (c4 swaps text content only),
-    so the chain composes with any downstream operator.
+    so the chain composes with any downstream operator.  ``id_col`` must
+    be unique: line_dedup and substring_dedup join their rewritten text
+    back on it, and multiply a repeated id.  The stages listed in the
+    module docstring share their body with ``curate_stream`` (media/video,
+    URL, line and substring dedup, langid, quality, perplexity and
+    gopher_repetition keep a batch form, for the reasons given there).
 
     ``barrier`` (default: ``report``) inserts a lazy ``localCheckpoint``
     after each stage — the SubsetEngine phase-barrier lesson applied here:
@@ -509,8 +741,28 @@ def curate_corpus(
                     "chain stays composable; project inside the stage")
             cur = _record(name, out)
 
+    def _shared(name: str, stage, opts) -> None:
+        # a stage body curate_stream runs too, projected back to the
+        # input columns (dropping the stream's audit columns)
+        nonlocal cur
+        cur = _record(name, stage(cur, opts, text_col=text_col,
+                                  id_col=id_col).select(*cur.columns))
+        _apply_extra(name)
+
+    def _rejoin_text(name: str, rewritten: DataFrame) -> None:
+        # the rewritten text joined back on id_col (a repeated id
+        # multiplies rows: id_col must be unique)
+        nonlocal cur
+        new = rewritten.select(id_col, F.col(text_col).alias("_text_new"))
+        cur = _record(name, cur.join(new, on=id_col).select(
+            *[F.col("_text_new").alias(text_col) if c == text_col
+              else F.col(c) for c in cur.columns]))
+        _apply_extra(name)
+
     _apply_extra("start")
     if media_dedup:
+        # two forms: an in-corpus pairwise dedup here, a probe of a landed
+        # hash index in curate_stream.
         # ingest-level media dedup FIRST (the examples/image_phash_dedup
         # flow as one composer stage — r16 punch #5): keep-rows
         # perceptual-hash dedup over the kinds= modalities (default
@@ -536,6 +788,8 @@ def curate_corpus(
             _media_dedup_fn(in_scope, **opts).unionByName(pass_through))
         _apply_extra("media_dedup")
     if video_dedup:
+        # two forms, as media_dedup: in-corpus here, landed-index probe in
+        # curate_stream.
         # temporal-fingerprint keep-rows dedup for kind=video; non-video
         # rows pass through inside functions.video_dedup by construction
         from condenser_spark.functions.multimodal import (
@@ -550,6 +804,8 @@ def curate_corpus(
         cur = _record("video_dedup", _video_dedup_fn(cur, **opts))
         _apply_extra("video_dedup")
     if url_filter:
+        # two forms: the url_dedup aggregate here, a landed-corpus URL
+        # bloom in curate_stream (a stream cannot aggregate statelessly)
         from condenser_spark.functions.urls import curate_urls, url_dedup
 
         opts = dict(url_filter) if isinstance(url_filter, dict) else {}
@@ -570,143 +826,30 @@ def curate_corpus(
         cur = _record("url_filter", kept)
         _apply_extra("url_filter")
     if domain_prior is not None:
-        from condenser_spark.functions.urls import domain_prior as _dp
-
-        opts = dict(domain_prior)
-        dp_kw = {k: opts.pop(k) for k in ("stats", "multi_suffixes")
-                 if k in opts}
-        dp_url = opts.pop("url_col", "url")
-        max_share = opts.pop("max_share", None)
-        min_docs = opts.pop("min_docs", None)
-        if opts or (max_share is None and min_docs is None):
-            raise ValueError(
-                "domain_prior= takes max_share and/or min_docs (at "
-                "least one) plus stats/url_col/multi_suffixes; got "
-                f"unknown/empty: {sorted(opts) or '{}'}")
-        pri = _dp(cur, dp_url, **dp_kw)
-        # NULL priors (no URL, or domain absent from a reference
-        # stats= snapshot) PASS — the chain's survive-by-default rule
-        cond = F.lit(True)
-        if max_share is not None:
-            cond = cond & (F.col("domain_doc_share").isNull()
-                           | (F.col("domain_doc_share")
-                              <= float(max_share)))
-        if min_docs is not None:
-            cond = cond & (F.col("domain_n_docs").isNull()
-                           | (F.col("domain_n_docs") >= int(min_docs)))
-        cur = _record("domain_prior", pri.filter(cond)
-                      .select(*cur.columns))
-        _apply_extra("domain_prior")
+        _shared("domain_prior", _domain_prior_stage, domain_prior)
     if html:
-        from condenser_spark.functions.html import extract_html_text
-
-        opts = dict(html) if isinstance(html, dict) else {}
-        if opts.get("out_col") is not None:
-            raise ValueError(
-                "html={'out_col': ...} is not allowed in the chain "
-                "(the schema-preservation contract); call "
-                "extract_html_text directly to add a column")
-        cur = _record(
-            "html_extract",
-            extract_html_text(cur, text_col=text_col, **opts),
-        )
-        _apply_extra("html_extract")
+        _shared("html_extract", _html_stage, html)
     if normalize:
-        from condenser_spark.functions.text import normalize_text
-
-        opts = dict(normalize) if isinstance(normalize, dict) else {}
-        if opts.get("out_col") is not None:
-            raise ValueError(
-                "normalize={'out_col': ...} is not allowed in the chain "
-                "(the schema-preservation contract); call "
-                "normalize_text directly to add a column")
-        cur = _record(
-            "normalize_text",
-            normalize_text(cur, text_col=text_col, **opts),
-        )
-        _apply_extra("normalize_text")
+        _shared("normalize_text", _normalize_stage, normalize)
     if line_dedup:
+        # two forms: a corpus self-join here, a landed-index bloom probe
+        # in curate_stream
         from condenser_spark.functions.text import dedup_lines
 
-        opts = line_dedup if isinstance(line_dedup, dict) else {}
-        deduped = dedup_lines(cur, text_col=text_col, id_col=id_col,
-                              **opts).select(
-            id_col, F.col(text_col).alias("_text_ld"))
-        cur = _record(
-            "line_dedup",
-            cur.join(deduped, on=id_col).select(
-                *[F.col("_text_ld").alias(text_col) if c == text_col
-                  else F.col(c) for c in cur.columns]),
-        )
-        _apply_extra("line_dedup")
+        _rejoin_text("line_dedup", dedup_lines(
+            cur, text_col=text_col, id_col=id_col,
+            **_stage_opts(line_dedup)))
     if badwords is not None:
-        from condenser_spark.functions.text import badwords_flags
-
-        opts = (dict(badwords) if isinstance(badwords, dict)
-                else {"badwords": badwords})
-        flagged = badwords_flags(cur, text_col=text_col, id_col=id_col,
-                                 **opts)
-        cur = _record(
-            "badwords",
-            flagged.filter(~F.col("badwords_hit")).select(*cur.columns),
-        )
-        _apply_extra("badwords")
+        _shared("badwords", _badwords_stage, badwords)
     if c4:
-        from condenser_spark.functions.text import c4_clean
-
-        opts = c4 if isinstance(c4, dict) else {}
-        cleaned = c4_clean(cur, text_col=text_col, id_col=id_col, **opts)
-        keep = cleaned.filter(F.col("doc_ok")).select(
-            id_col, F.col("text_clean"))
-        cur = _record(
-            "c4_clean",
-            cur.join(keep, on=id_col).select(
-                *[F.col("text_clean").alias(text_col) if c == text_col
-                  else F.col(c) for c in cur.columns]),
-        )
-        _apply_extra("c4_clean")
+        _shared("c4_clean", _c4_stage, c4)
     if diversity is not None:
-        from condenser_spark.streaming.textdedup import (
-            diversity_stats_stateless,
-        )
-
-        opts = dict(diversity)
-        thresholds = {
-            n: float(opts.pop(f"min_ratio_{n}"))
-            for n in (1, 2, 3) if f"min_ratio_{n}" in opts
-        }
-        if opts or not thresholds:
-            raise ValueError(
-                "diversity= takes min_ratio_1/min_ratio_2/min_ratio_3 "
-                f"(at least one); got unknown/empty: {sorted(opts) or '{}'}"
-            )
-        # the stateless kernel (batch-legal, parity-pinned vs the batch
-        # diversity_stats oracle) keeps the gate JOIN-FREE — one Arrow
-        # projection + filter, schema restored by dropping the stats
-        keep = tuple(c for c in cur.columns if c != id_col)
-        stats = diversity_stats_stateless(
-            cur, text_col=text_col, id_col=id_col, keep_cols=keep)
-        cond = F.lit(True)
-        for n, t in sorted(thresholds.items()):
-            r = F.col(f"ratio_{n}")
-            cond = cond & (r.isNull() | (r >= F.lit(t)))
-        cur = _record(
-            "diversity_gate",
-            stats.filter(cond).select(id_col, *keep),
-        )
-        _apply_extra("diversity_gate")
+        _shared("diversity_gate", _diversity_stage, diversity)
     if script is not None:
-        # mixed-script spam gate (the CCNet pre-langid slot): pure
-        # codegen fractions, join-free via keep_cols, schema-preserving
-        from condenser_spark.functions.langid import script_gate_parts
-
-        keep = tuple(c for c in cur.columns if c != id_col)
-        stats, cond = script_gate_parts(cur, script, text_col=text_col,
-                                        id_col=id_col, keep_cols=keep)
-        cur = _record("script_gate",
-                      stats.filter(cond).select(id_col, *keep))
-        _apply_extra("script_gate")
+        _shared("script_gate", _script_stage, script)
     if language_model is not None:
+        # two forms: explode-and-aggregate scoring here, the per-row
+        # stateless twin in curate_stream
         from condenser_spark.functions.langid import language_top1
 
         if lang_col not in cur.columns:
@@ -725,6 +868,8 @@ def curate_corpus(
         )
         _apply_extra("language_id")
     if perplexity_buckets is not None:
+        # two forms: the batch scorers and quantile aggregate here, the
+        # per-row twins against landed thresholds in curate_stream
         from condenser_spark.functions.corpus import (
             apply_quantile_thresholds,
             quantile_buckets,
@@ -811,37 +956,16 @@ def curate_corpus(
         )
         _apply_extra("perplexity_buckets")
     if gopher:
-        # key set via the substitution-proof single-expression condition
-        # (r17, see streaming/curate.py's gopher gate): same passing ids
-        # as flags.filter("gopher_pass"), without the predicate-pushdown
-        # re-inlining of the tokenize subtree.  The semi-join shape is
-        # kept: stage semantics (including duplicate-id inputs) and the
-        # recorded plan are unchanged beyond the key-side lineage.
-        from condenser_spark.functions.text import gopher_pass_condition
-
-        opts = gopher if isinstance(gopher, dict) else {}
-        cur = _record(
-            "gopher_rules",
-            cur.join(cur.filter(gopher_pass_condition(text_col=text_col,
-                                                      **opts))
-                     .select(id_col),
-                     on=id_col, how="left_semi"),
-        )
-        _apply_extra("gopher_rules")
+        _shared("gopher_rules", _gopher_stage, gopher)
     if gopher_repetition:
-        opts = (gopher_repetition
-                if isinstance(gopher_repetition, dict) else {})
+        # two forms: the default here is the 7-rule SQL-native table,
+        # curate_stream's the 12-rule kernel (different results)
+        opts = _stage_opts(gopher_repetition)
         if any(k.startswith("max_dup_") and k.endswith("gram_char_frac")
                for k in opts):
             # the duplicated 5..10-gram coverage rows (A1.2 rows 7-12)
-            # only exist in the stateless kernel (batch-legal, and the
-            # faster form — STRESS 27); switch when they are requested
-            from condenser_spark.streaming.textdedup import (
-                gopher_repetition_stateless,
-            )
-
-            flags = gopher_repetition_stateless(
-                cur, text_col=text_col, id_col=id_col, **opts)
+            # only exist in the 12-rule kernel; switch when requested
+            _shared("gopher_repetition", _gopher_repetition_stage, opts)
         else:
             from condenser_spark.functions.text import (
                 gopher_repetition_flags,
@@ -849,41 +973,15 @@ def curate_corpus(
 
             flags = gopher_repetition_flags(cur, text_col=text_col,
                                             id_col=id_col, **opts)
-        cur = _record(
-            "gopher_repetition",
-            cur.join(flags.filter(F.col("gopher_rep_pass"))
-                     .select(id_col),
-                     on=id_col, how="left_semi"),
-        )
-        _apply_extra("gopher_repetition")
+            cur = _record(
+                "gopher_repetition",
+                cur.join(flags.filter(F.col("gopher_rep_pass"))
+                         .select(id_col), on=id_col, how="left_semi"))
+            _apply_extra("gopher_repetition")
     if fineweb:
-        from condenser_spark.functions.text import fineweb_quality_flags
-
-        opts = fineweb if isinstance(fineweb, dict) else {}
-        flags = fineweb_quality_flags(cur, text_col=text_col,
-                                      id_col=id_col, **opts)
-        cur = _record(
-            "fineweb_rules",
-            cur.join(flags.filter(F.col("fineweb_pass")).select(id_col),
-                     on=id_col, how="left_semi"),
-        )
-        _apply_extra("fineweb_rules")
+        _shared("fineweb_rules", _fineweb_stage, fineweb)
     if code:
-        # The Stack's code-corpus rules (Kocetkov 2022 §2.3): pure
-        # codegen riding the scan — join-free like the script gate,
-        # cq_-prefixed stats so a passthrough n_chars cannot shadow
-        from condenser_spark.functions.text import code_quality_flags
-
-        opts = dict(code) if isinstance(code, dict) else {}
-        keep = tuple(c for c in cur.columns if c != id_col)
-        flags = code_quality_flags(cur, text_col=text_col, id_col=id_col,
-                                   keep_cols=keep, out_prefix="cq_",
-                                   **opts)
-        cur = _record(
-            "code_rules",
-            flags.filter(F.col("cq_code_pass")).select(*cur.columns),
-        )
-        _apply_extra("code_rules")
+        _shared("code_rules", _code_stage, code)
     if dedup is not None:
         if dedup == "exact":
             from condenser_spark.functions.dedup import exact_dedup
@@ -904,19 +1002,13 @@ def curate_corpus(
         else:
             raise ValueError(f"dedup must be 'exact'|'near'|None: {dedup!r}")
     if substring_dedup:
+        # two forms, as line_dedup: a corpus self-join here, a landed
+        # k-gram bloom probe in curate_stream
         from condenser_spark.functions.text import exact_substring_dedup
 
-        opts = substring_dedup if isinstance(substring_dedup, dict) else {}
-        cut = exact_substring_dedup(cur, text_col=text_col, id_col=id_col,
-                                    **opts).select(
-            id_col, F.col(text_col).alias("_text_sd"))
-        cur = _record(
-            "substring_dedup",
-            cur.join(cut, on=id_col).select(
-                *[F.col("_text_sd").alias(text_col) if c == text_col
-                  else F.col(c) for c in cur.columns]),
-        )
-        _apply_extra("substring_dedup")
+        _rejoin_text("substring_dedup", exact_substring_dedup(
+            cur, text_col=text_col, id_col=id_col,
+            **_stage_opts(substring_dedup)))
     if eval_df is not None:
         from condenser_spark.functions.dedup import decontaminate_bloom
 
@@ -927,6 +1019,8 @@ def curate_corpus(
         )
         _apply_extra("decontaminate")
     if quality_model is not None:
+        # two forms: explode-and-aggregate scoring here, the per-row
+        # stateless twin in curate_stream
         from condenser_spark.functions.quality import score_documents
 
         scored = score_documents(cur, quality_model, text_col=text_col,
@@ -965,17 +1059,7 @@ def curate_corpus(
     if pii:
         # published LAST (Dolma §4.2): masking after dedup/selection so
         # placeholder tokens never change survivor election
-        from condenser_spark.functions.pii import redact_pii
-
-        opts = dict(pii) if isinstance(pii, dict) else {}
-        if opts.pop("counts", False):
-            raise ValueError(
-                "pii={'counts': True} is not allowed in the chain (the "
-                "schema-preservation contract); call redact_pii "
-                "directly for the audit columns")
-        cur = _record("pii_redact",
-                      redact_pii(cur, text_col=text_col, **opts))
-        _apply_extra("pii_redact")
+        _shared("pii_redact", _pii_stage, pii)
 
     _apply_extra("end")
     if pending:

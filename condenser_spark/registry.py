@@ -248,13 +248,17 @@ def metadata_row_count(df: DataFrame) -> int | None:
     than Spark lists on the driver (:data:`FILE_THRESHOLD_CONF`) and a
     footer that cannot be read (a corrupt file under
     ``spark.sql.files.ignoreCorruptFiles`` is Spark's to skip)."""
-    qe = df._jdf.queryExecution()
-    # the analyzed plan with cached data substituted, unless the optimizer
-    # is needed to fold a limit(0) into a LocalRelation: optimizing a plain
-    # scan costs more than the rest of the count
-    plan = _below_projects(qe.withCachedData())
+    jspark = df.sparkSession._jsparkSession
+    # the analyzed plan with cached data substituted now (the frame's own
+    # QueryExecution substitutes once, so it misses a later persist()),
+    # optimized only to fold a limit(0) into a LocalRelation: optimizing
+    # a plain scan costs more than the rest of the count
+    cached = jspark.sharedState().cacheManager().useCachedData(
+        df._jdf.queryExecution().analyzed())
+    plan = _below_projects(cached)
     if plan.nodeName() != "LogicalRelation":
-        plan = _below_projects(qe.optimizedPlan())
+        plan = _below_projects(
+            jspark.sessionState().optimizer().execute(cached))
     kind = plan.nodeName()
     if kind == "LocalRelation":
         return None if plan.isStreaming() else plan.data().size()

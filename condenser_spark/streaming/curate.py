@@ -1,37 +1,26 @@
 """One-call INGEST-TIME curation: the stateless subset of
 :func:`condenser_spark.curate.curate_corpus`, composable on a Structured
 Streaming frame — readStream -> curate_stream -> writeStream with NO
-joins, NO aggregates, NO watermark, NO state store.
+aggregates, NO watermark, NO state store (joins are stream-static only).
 
-Every stage is an already-verified stateless operator, applied in the
-batch composer's published order:
+The per-document stages (domain_prior, html, normalize, badwords, c4,
+diversity, script, gopher, fineweb, code, pii) are the batch composer's own
+stage bodies, each one map over the micro-batch.  Where the batch
+algorithm needs the whole corpus, this one probes what is already landed:
+URL, line and ExactSubstr dedup against blooms of the landed corpus
+(``build_url_bloom``, ``build_line_bloom``, ``build_kgram_bloom``),
+media/video dedup against a landed index (``curate_micro_batch`` on a
+stream),
+perplexity against landed thresholds; langid, quality and perplexity
+score with the per-row twins, and gopher_repetition runs the 12-rule
+kernel.  Instead of the batch per-stage COUNT report (an aggregation a
+stream cannot run statelessly) it returns per-document audit columns —
+``ld_*``, ``es_*``, ``dv_*``, ``sc_*``, ``quality_logit`` — to aggregate
+downstream on whatever window the monitoring needs.
 
-1. line dedup vs the LANDED corpus (``streaming/textdedup.py:
-   dedup_lines_stream`` against a ``build_line_bloom`` index),
-2. ExactSubstr vs the landed corpus (``exact_substring_stream`` against
-   ``build_kgram_bloom``),
-3. C4 line cleaning (``text.c4_clean`` — a pure projection; rows with
-   ``doc_ok`` False are dropped, the cleaned text swapped in),
-4. language ID (``langid.language_top1_stateless`` — rewrites or creates
-   ``lang_col``),
-5. Gopher flags (``text.gopher_quality_flags`` — keep ``gopher_pass``),
-6. quality-classifier filter (``quality.score_documents_stateless`` —
-   keep ``quality_logit >= quality_threshold``).
-
-Where the batch composer swaps rewritten text back with an id join (fine
-in batch, illegal on a stream), this one rides the ``keep_cols``
-passthrough the projections expose — every stage is one map over the
-micro-batch.  Where the batch composer returns a per-stage COUNT report
-(an aggregation a stream cannot run statelessly), this one returns
-per-document audit columns instead: ``ld_*`` (line dedup), ``es_*``
-(ExactSubstr), ``quality_logit`` — aggregate them downstream on whatever
-window the monitoring needs.
-
-Batch/stream duality: the output is a plain DataFrame transformation, so
-the SAME call runs on a batch frame — that is the parity surface
-(tests/test_curate_stream.py) and what the full DuckDB oracle replays
-(goldens_ext.ext_curate_stream chains the two REWRITE stages as one lazy
-plan).
+The output is a plain DataFrame transformation, so the SAME call runs on
+a batch frame: the parity surface (tests/test_curate_stream.py) and what
+the DuckDB oracle replays (goldens_ext.ext_curate_stream).
 """
 
 from __future__ import annotations
@@ -39,12 +28,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from condenser_spark.curate import (
+    _badwords_stage,
+    _c4_stage,
+    _code_stage,
+    _diversity_stage,
+    _domain_prior_stage,
+    _fineweb_stage,
+    _gopher_repetition_stage,
+    _gopher_stage,
+    _html_stage,
+    _normalize_stage,
+    _pii_stage,
+    _resolve_perplexity_opts,
+    _script_stage,
+)
 from condenser_spark.functions.dedup import ShingleBloom, _bloom_hash_cols
 from condenser_spark.streaming.textdedup import (
     _collect_bloom,
     _member_col,
     dedup_lines_stream,
-    diversity_stats_stateless,
     exact_substring_stream,
 )
 
@@ -141,7 +144,13 @@ def curate_stream(
     not rely on in-doc dedup there; the stage runs iff its bloom is not
     ``None``).  Every stage is a stateless projection/filter: the result
     runs identically on a batch frame (the parity/oracle surface) and on
-    a readStream source.
+    a readStream source.  The stages named in the module docstring run
+    the same body as in :func:`condenser_spark.curate.curate_corpus`;
+    here domain_prior requires ``stats=`` and badwords keeps its
+    ``max_plan_literals`` cap.  URL, line and substring dedup probe
+    landed blooms, media/video dedup a landed index, langid, quality and
+    perplexity score per row, and gopher_repetition runs all 12 rules,
+    where the batch composer works over the whole corpus.
 
     The URL stage (FineWeb §3.1 — URL filtering BEFORE any text is read)
     runs first when ``blocked_domains`` or ``url_bloom`` is given:
@@ -157,6 +166,7 @@ def curate_stream(
     blocklist flag and the bloom probe are null-safe, so a missing URL
     can neither drop the row nor feed the kernel a garbage hash."""
     cur = docs
+    kw = {"text_col": text_col, "id_col": id_col}
 
     if media_dedup is not None or video_dedup is not None:
         # ingest-level media/video dedup AGAINST A LANDED INDEX (r16
@@ -175,32 +185,24 @@ def curate_stream(
                 "in foreachBatch and call curate_micro_batch(batch_df, "
                 "media_dedup=..., video_dedup=..., <stateless stages>) "
                 "there (streaming/curate.py) instead")
-        if media_dedup is not None:
-            from condenser_spark.streaming.media import (
-                media_dedup_batch_against_corpus,
-            )
+        from condenser_spark.streaming import media
 
-            opts = dict(media_dedup)
+        for name, opts, dedup_fn, index_fn in (
+                ("media_dedup", media_dedup,
+                 media.media_dedup_batch_against_corpus,
+                 "build_media_hash_index"),
+                ("video_dedup", video_dedup,
+                 media.video_dedup_batch_against_corpus,
+                 "build_video_fp_index")):
+            if opts is None:
+                continue
+            opts = dict(opts)
             idx = opts.pop("index", None)
             if idx is None:
                 raise ValueError(
-                    "media_dedup= needs index= (a build_media_hash_index "
-                    "frame over the landed corpus; rebuild it on the "
-                    "landed cadence)")
-            cur = media_dedup_batch_against_corpus(cur, idx, **opts)
-        if video_dedup is not None:
-            from condenser_spark.streaming.media import (
-                video_dedup_batch_against_corpus,
-            )
-
-            opts = dict(video_dedup)
-            idx = opts.pop("index", None)
-            if idx is None:
-                raise ValueError(
-                    "video_dedup= needs index= (a build_video_fp_index "
-                    "frame over the landed corpus; rebuild it on the "
-                    "landed cadence)")
-            cur = video_dedup_batch_against_corpus(cur, idx, **opts)
+                    f"{name}= needs index= (a {index_fn} frame over the "
+                    "landed corpus; rebuild it on the landed cadence)")
+            cur = dedup_fn(cur, idx, **opts)
 
     if blocked_domains or url_bloom is not None:
         from condenser_spark.functions.urls import curate_urls
@@ -218,91 +220,33 @@ def curate_stream(
         cur = flagged.filter(keep).select(*cols)
 
     if domain_prior is not None:
-        # the RefinedWeb domain-signal slot at ingest: priors MUST come
-        # from a landed reference snapshot (stats=) — computing them
-        # over the stream itself would need a corpus-wide aggregate,
-        # illegal mid-stream; the join is stream-static (legal).  NULL
-        # priors pass (survive-by-default, as in the batch composer).
-        from condenser_spark.functions.urls import domain_prior as _dp
-
-        opts = dict(domain_prior)
-        if opts.get("stats") is None:
+        # priors MUST come from a landed reference snapshot (stats=): the
+        # self-prior is a corpus-wide aggregate, illegal mid-stream; the
+        # join against the snapshot is stream-static (legal)
+        if domain_prior.get("stats") is None:
             raise ValueError(
                 "curate_stream(domain_prior=) requires stats= (a landed "
                 "domain_stats snapshot): self-priors need a corpus-wide "
                 "aggregate, illegal mid-stream — compute them on the "
                 "landed-corpus cadence")
-        dp_kw = {k: opts.pop(k) for k in ("stats", "multi_suffixes")
-                 if k in opts}
-        dp_url = opts.pop("url_col", url_col)
-        max_share = opts.pop("max_share", None)
-        min_docs = opts.pop("min_docs", None)
-        if opts or (max_share is None and min_docs is None):
-            raise ValueError(
-                "domain_prior= takes max_share and/or min_docs (at "
-                "least one) plus stats/url_col/multi_suffixes; got "
-                f"unknown/empty: {sorted(opts) or '{}'}")
-        cols = cur.columns
-        pri = _dp(cur, dp_url, **dp_kw)
-        cond = F.lit(True)
-        if max_share is not None:
-            cond = cond & (F.col("domain_doc_share").isNull()
-                           | (F.col("domain_doc_share")
-                              <= float(max_share)))
-        if min_docs is not None:
-            cond = cond & (F.col("domain_n_docs").isNull()
-                           | (F.col("domain_n_docs") >= int(min_docs)))
-        cur = pri.filter(cond).select(*cols)
-
+        cur = _domain_prior_stage(cur, {"url_col": url_col, **domain_prior},
+                                  **kw)
     if html:
-        # FineWeb §3.1 / RefinedWeb §3.2: extraction between the fetch
-        # and the first text rule.  Scalar pandas_udf — per-row,
-        # stateless, stream-legal; REPLACES text_col in place.
-        from condenser_spark.functions.html import extract_html_text
-
-        opts = dict(html) if isinstance(html, dict) else {}
-        if opts.get("out_col") is not None:
-            raise ValueError(
-                "html={'out_col': ...} is not allowed in the chain "
-                "(the schema-preservation contract); call "
-                "extract_html_text directly to add a column")
-        cur = extract_html_text(cur, text_col=text_col, **opts)
-
+        cur = _html_stage(cur, html, **kw)
     if normalize:
-        # CCNet's preprocessing step, before any fingerprint: scalar
-        # Arrow kernel, per-row, stateless, stream-legal
-        from condenser_spark.functions.text import normalize_text
-
-        opts = dict(normalize) if isinstance(normalize, dict) else {}
-        if opts.get("out_col") is not None:
-            raise ValueError(
-                "normalize={'out_col': ...} is not allowed in the chain "
-                "(the schema-preservation contract); call "
-                "normalize_text directly to add a column")
-        cur = normalize_text(cur, text_col=text_col, **opts)
+        cur = _normalize_stage(cur, normalize, **kw)
 
     if line_bloom is not None:
-        out = dedup_lines_stream(cur, line_bloom,
-                                 strip_digits=strip_digits,
-                                 text_col=text_col, id_col=id_col)
-        for old, new in _LD_AUDIT.items():
-            out = out.withColumnRenamed(old, new)
-        cur = out
+        cur = dedup_lines_stream(
+            cur, line_bloom, strip_digits=strip_digits, text_col=text_col,
+            id_col=id_col).withColumnsRenamed(_LD_AUDIT)
 
     if kgram_bloom is not None:
-        out = exact_substring_stream(cur, kgram_bloom, k=k,
-                                     text_col=text_col, id_col=id_col)
-        for old, new in _ES_AUDIT.items():
-            out = out.withColumnRenamed(old, new)
-        cur = out
+        cur = exact_substring_stream(
+            cur, kgram_bloom, k=k, text_col=text_col,
+            id_col=id_col).withColumnsRenamed(_ES_AUDIT)
 
     if badwords is not None:
-        # C4 SS2.2's first rule, before the line rules: one codegen
-        # alternation regex riding the scan — stream-legal by
-        # construction (the past-cap token-join regime is batch-only
-        # and raises here via max_plan_literals)
-        from condenser_spark.functions.text import badwords_flags
-
         opts = (dict(badwords) if isinstance(badwords, dict)
                 else {"badwords": badwords})
         n_words = len(tuple(opts.get("badwords", ())))
@@ -313,88 +257,13 @@ def curate_stream(
                 f"max_plan_literals={cap}: the fallback token-join "
                 "regime needs a distinct (illegal mid-stream) — raise "
                 "max_plan_literals or gate in batch")
-        flagged = badwords_flags(cur, text_col=text_col, id_col=id_col,
-                                 **opts)
-        cur = flagged.filter(~F.col("badwords_hit")).drop("badwords_hit")
-
+        cur = _badwords_stage(cur, opts, **kw)
     if c4:
-        from condenser_spark.functions.text import (
-            c4_clean,
-            c4_pass_condition,
-        )
-
-        opts = dict(c4) if isinstance(c4, dict) else {}
-        keep = tuple(c for c in cur.columns if c not in (id_col, text_col))
-        # gate FIRST on the self-contained doc_ok condition (the
-        # gopher_pass_condition twin, r18): doc_ok depends only on the
-        # stage-input text, so filtering before the cleaning projection
-        # keeps the row set identical while (a) dropped docs never pay
-        # the text_clean rebuild and (b) no ``filter("doc_ok")`` alias
-        # remains for Catalyst to substitute down into an interpreted
-        # Filter above the Arrow kernels
-        cur = cur.filter(c4_pass_condition(text_col=text_col, **opts))
-        cleaned = c4_clean(cur, text_col=text_col, id_col=id_col,
-                           keep_cols=keep, **opts)
-        cur = (
-            cleaned.withColumnRenamed("text_clean", text_col)
-            .drop("n_lines", "n_lines_kept", "doc_ok")
-            .select(id_col, text_col, *keep)
-        )
-
+        cur = _c4_stage(cur, c4, **kw)
     if diversity is not None:
-        # repetition/diversity gate (the Gopher/FineWeb ingest-chain slot:
-        # after the text rewrites + C4, before langid): per-doc distinct-n
-        # ratios from the stateless twin, thresholded.  ``diversity`` is a
-        # dict of min_ratio_1/min_ratio_2/min_ratio_3 (any subset) — there
-        # is no published universal threshold (Li et al. 2016 report the
-        # statistic; gates are corpus-specific), so the caller must pick.
-        # A doc too short to HAVE an n-gram of length n (ratio NULL) PASSES
-        # that gate: no repetition evidence, the chain's survive-by-default
-        # rule.  Audit columns dv_* pass through like ld_*/es_*.
-        opts = dict(diversity)
-        thresholds = {
-            n: float(opts.pop(f"min_ratio_{n}"))
-            for n in (1, 2, 3) if f"min_ratio_{n}" in opts
-        }
-        if opts or not thresholds:
-            raise ValueError(
-                "diversity= takes min_ratio_1/min_ratio_2/min_ratio_3 "
-                f"(at least one); got unknown/empty: {sorted(opts) or '{}'}"
-            )
-        keep = tuple(c for c in cur.columns if c != id_col)
-        stats = diversity_stats_stateless(
-            cur, text_col=text_col, id_col=id_col, keep_cols=keep)
-        cond = F.lit(True)
-        for n, t in sorted(thresholds.items()):
-            r = F.col(f"ratio_{n}")
-            cond = cond & (r.isNull() | (r >= F.lit(t)))
-        cur = stats.filter(cond).select(
-            id_col, *keep,
-            F.col("n_tokens").alias("dv_n_tokens"),
-            *[F.col(f"distinct_{n}").alias(f"dv_distinct_{n}")
-              for n in (1, 2, 3)],
-            *[F.col(f"ratio_{n}").alias(f"dv_ratio_{n}")
-              for n in (1, 2, 3)],
-        )
-
+        cur = _diversity_stage(cur, diversity, **kw)
     if script is not None:
-        # mixed-script spam gate at ingest (the CCNet pre-langid slot):
-        # pure codegen fractions, stream-legal by construction.  Audit
-        # columns sc_* pass through like dv_*/ld_*.
-        from condenser_spark.functions.langid import (
-            _SCRIPTS,
-            script_gate_parts,
-        )
-
-        keep = tuple(c for c in cur.columns if c != id_col)
-        stats, cond = script_gate_parts(cur, script, text_col=text_col,
-                                        id_col=id_col, keep_cols=keep)
-        cur = stats.filter(cond).select(
-            id_col, *keep,
-            "sc_n_chars",
-            *[f"sc_{stem}_frac" for stem, _ in _SCRIPTS],
-            "sc_other_frac",
-        )
+        cur = _script_stage(cur, script, **kw)
 
     if language_model is not None:
         from condenser_spark.functions.langid import (
@@ -418,7 +287,6 @@ def curate_stream(
         # outside keep=.  Same option surface as the batch composer
         # (shared resolver, incl. lm=<save_lm path>); thresholds= is
         # REQUIRED here.
-        from condenser_spark.curate import _resolve_perplexity_opts
         from condenser_spark.functions.corpus import (
             apply_quantile_thresholds,
         )
@@ -503,61 +371,15 @@ def curate_stream(
                .select(*keep_cols_all))
 
     if gopher:
-        # the substitution-proof single-expression form (r17): a
-        # flags-then-filter gate gets its predicate alias-substituted
-        # into one interpreted Filter above the rewrite kernels with the
-        # tokenize subtree re-inlined ~14x (measured 2.34 -> 0.42 s at
-        # sf0.1); gopher_pass_condition binds the arrays once as lambda
-        # variables so no pushdown can duplicate them.  Row-identical to
-        # the flags path (the old shape also filtered per row).
-        from condenser_spark.functions.text import gopher_pass_condition
-
-        opts = dict(gopher) if isinstance(gopher, dict) else {}
-        keep = tuple(c for c in cur.columns if c != id_col)
-        cur = (cur.filter(gopher_pass_condition(text_col=text_col, **opts))
-               .select(id_col, *keep))
+        cur = _gopher_stage(cur, gopher, **kw)
 
     if gopher_repetition:
-        # the A1.2 companion to the gopher stage, in the batch composer's
-        # order — one Arrow kernel per micro-batch, stateless
-        from condenser_spark.streaming.textdedup import (
-            gopher_repetition_stateless,
-        )
-
-        opts = (gopher_repetition
-                if isinstance(gopher_repetition, dict) else {})
-        keep = tuple(c for c in cur.columns if c != id_col)
-        flagged = gopher_repetition_stateless(
-            cur, text_col=text_col, id_col=id_col, keep_cols=keep, **opts)
-        cur = flagged.filter(F.col("gopher_rep_pass")).select(
-            id_col, *keep)
+        cur = _gopher_repetition_stage(cur, gopher_repetition, **kw)
 
     if fineweb:
-        # the three custom FineWeb heuristics, in the batch composer's
-        # order (after the Gopher rules) — one Arrow kernel, stateless
-        from condenser_spark.streaming.textdedup import (
-            fineweb_quality_stateless,
-        )
-
-        opts = dict(fineweb) if isinstance(fineweb, dict) else {}
-        keep = tuple(c for c in cur.columns if c != id_col)
-        flagged = fineweb_quality_stateless(
-            cur, text_col=text_col, id_col=id_col, keep_cols=keep, **opts)
-        cur = flagged.filter(F.col("fineweb_pass")).select(
-            id_col, *keep)
-
+        cur = _fineweb_stage(cur, fineweb, **kw)
     if code:
-        # The Stack's code-corpus rules: pure codegen, join-free,
-        # stream-legal by construction (cq_-prefixed internals so a
-        # passthrough n_chars cannot shadow a stat)
-        from condenser_spark.functions.text import code_quality_flags
-
-        opts = dict(code) if isinstance(code, dict) else {}
-        keep = tuple(c for c in cur.columns if c != id_col)
-        flagged = code_quality_flags(cur, text_col=text_col,
-                                     id_col=id_col, keep_cols=keep,
-                                     out_prefix="cq_", **opts)
-        cur = flagged.filter(F.col("cq_code_pass")).select(id_col, *keep)
+        cur = _code_stage(cur, code, **kw)
 
     if quality_model is not None:
         from condenser_spark.functions.quality import (
@@ -570,17 +392,7 @@ def curate_stream(
         cur = scored.filter(
             F.col("quality_logit") >= F.lit(float(quality_threshold)))
     if pii:
-        # LAST, mirroring the batch composer's pii_redact stage: pure
-        # regexp_replace codegen, trivially stream-legal
-        from condenser_spark.functions.pii import redact_pii
-
-        opts = dict(pii) if isinstance(pii, dict) else {}
-        if opts.pop("counts", False):
-            raise ValueError(
-                "pii={'counts': True} is not allowed in the chain (the "
-                "schema-preservation contract); call redact_pii "
-                "directly for the audit columns")
-        cur = redact_pii(cur, text_col=text_col, **opts)
+        cur = _pii_stage(cur, pii, **kw)
 
     return cur
 

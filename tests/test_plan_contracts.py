@@ -815,3 +815,15 @@ def test_tabulate_of_countable_frames_plans_no_scan(spark, source):
     physical = qe.executedPlan().toString()
     assert "LocalTableScan" in physical and "FileScan" not in physical, \
         physical
+
+
+def test_curate_corpus_c4_and_gopher_do_not_join_back(spark, source):
+    """The batch C4 and Gopher stages are the join-free bodies curate_stream
+    runs: filters and projections over one scan, with no join back onto
+    the stage input by id."""
+    from condenser_spark.curate import curate_corpus
+
+    out, _ = curate_corpus(source["documents"], c4=True, gopher=True,
+                           report=False, barrier=False)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan

@@ -8,6 +8,7 @@ counterexamples on failure.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -1343,27 +1344,36 @@ def test_c4_clean_subset_order_and_idempotence(spark, texts):
             texts[i], out[i], out2[i])
 
 
+@pytest.fixture(scope="module")
+def dsir_corpus(spark):
+    """The DSIR property's 40-doc corpus and its target/raw importance
+    models, trained once: models trained on the whole corpus are valid
+    importance weights for every n-doc prefix of it."""
+    from condenser_spark.functions.dsir import train_hashed_ngram_lm
+
+    df = spark.createDataFrame(
+        [(i, f"doc number {i} talks about topic{i % 3} extensively")
+         for i in range(40)],
+        "doc_id long, text string").localCheckpoint()
+    tlm = train_hashed_ngram_lm(df.filter("doc_id % 3 = 0"), dim=64)
+    rlm = train_hashed_ngram_lm(df, dim=64)
+    return df, tlm.localCheckpoint(), rlm.localCheckpoint()
+
+
 @PROP
 @given(
     n=st.integers(min_value=5, max_value=40),
     k1=st.integers(min_value=1, max_value=10),
     extra=st.integers(min_value=1, max_value=10),
 )
-def test_dsir_sample_k_monotone_and_exact(spark, n, k1, extra):
+def test_dsir_sample_k_monotone_and_exact(dsir_corpus, n, k1, extra):
     """dsir_sample(k) returns exactly min(k, n) rows and is MONOTONE in k:
     the k1-sample is a subset of the (k1+extra)-sample (a rank threshold
     can only grow the set) — round-9."""
-    from condenser_spark.functions.dsir import (
-        dsir_sample,
-        train_hashed_ngram_lm,
-    )
+    from condenser_spark.functions.dsir import dsir_sample
 
-    df = spark.createDataFrame(
-        [(i, f"doc number {i} talks about topic{i % 3} extensively")
-         for i in range(n)],
-        "doc_id long, text string")
-    tlm = train_hashed_ngram_lm(df.filter("doc_id % 3 = 0"), dim=64)
-    rlm = train_hashed_ngram_lm(df, dim=64)
+    corpus, tlm, rlm = dsir_corpus
+    df = corpus.filter(f"doc_id < {n}")
     s1 = {r.doc_id for r in
           dsir_sample(df, k1, tlm, rlm, dim=64).select("doc_id").collect()}
     s2 = {r.doc_id for r in

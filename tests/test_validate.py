@@ -161,6 +161,31 @@ def test_tabulate_falls_back_above_file_threshold(spark, tmp_path):
         spark.conf.set(FILE_THRESHOLD_CONF, before)
 
 
+def test_tabulate_counts_a_frame_persisted_after_it_was_counted(spark,
+                                                                tmp_path):
+    """The cache is looked up when ``tabulate`` is called: a frame
+    persisted after its first report is counted by the Spark aggregate,
+    with the same counts."""
+    df = _three_part_files(spark, str(tmp_path / "t.parquet"))
+
+    def report():
+        rep = tabulate(spark, {"t": df}, {"t": df})
+        local = rep._jdf.queryExecution().optimizedPlan().nodeName()
+        return rep.collect(), local == "LocalRelation"
+
+    first, first_local = report()
+    assert first_local
+    df.persist()
+    try:
+        assert metadata_row_count(df) is None
+        second, second_local = report()
+        assert not second_local
+        assert second == first
+        _assert_tabulates(spark, {"t": df}, {"t": df})
+    finally:
+        df.unpersist()
+
+
 def test_tabulate_leaves_corrupt_files_to_spark(spark, tmp_path):
     """Under ``ignoreCorruptFiles`` Spark skips a part-file whose footer is
     garbage; the footer read fails, so Spark counts."""
