@@ -21,16 +21,65 @@ distinguish a real regression from jitter: byte-identical code showed >=50%
 per-query swings across driver runs.  The median of 3 warm runs is robust to
 a single GC/compilation stall in either direction; ``timing`` in the output
 records the method.
+
+The entries live in one ordered registry, ``ENTRIES``: name ->
+``Entry(build, act)``, where ``build(ctx)`` makes the entry's DataFrame (or a
+callable, for composite entries) and ``act`` is the action run on it.  The
+``BenchContext`` passed as ``ctx`` builds the shared inputs, models and
+fixtures on first use, in the untimed warm-up run.  The bench walks the
+registry in order; ``scripts/profile.py`` times named entries in isolation
+and captures their plans from the same definitions.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import random
 import shutil
 import sys
 import tempfile
 import time
+from functools import cached_property
+from typing import Any, Callable, NamedTuple
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from condenser_spark import sources
+from condenser_spark.config import SubsetConfig
+from condenser_spark.curate import curate_corpus
+from condenser_spark.engine import SubsetEngine
+from condenser_spark.fixtures import base_config_dict
+from condenser_spark.functions import (
+    bpe,
+    corpus,
+    dedup,
+    dsir,
+    html,
+    langid,
+    layout,
+    lm,
+    multimodal,
+    pii,
+    pq,
+    quality,
+    retrieval,
+    similarity,
+    temporal,
+    text,
+    unigram,
+    urls,
+)
+from condenser_spark.registry import load_source_tables, lookup_df
+from condenser_spark.session import get_spark
+from condenser_spark.streaming import textdedup
+from condenser_spark.streaming.curate import curate_stream
+from condenser_spark.streaming.sessionize import (
+    session_stats,
+    windowed_event_counts,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -225,628 +274,588 @@ def write_detail_artifact(detail_line: str, final_line: str,
     return path
 
 
-def bench_queries(spark, sf_dir: str) -> dict[str, float]:
-    """Headline operators, each timed to full materialization."""
-    from pyspark.sql import functions as F
+# ------------------------------------------------------------------ registry
 
-    from condenser_spark.config import SubsetConfig
-    from condenser_spark.engine import SubsetEngine
-    from condenser_spark.fixtures import base_config_dict
-    from condenser_spark.functions.dedup import (
-        exact_dedup,
-        minhash_lsh_pairs,
-        simhash_near_pairs,
-    )
-    from condenser_spark.functions.similarity import (
-        brute_force_cosine_topk,
-        embedding_cosine_dup_pairs,
-    )
-    from condenser_spark.functions.text import text_stats
-    from condenser_spark.registry import load_source_tables
-    from condenser_spark.streaming.sessionize import (
-        session_stats,
-        windowed_event_counts,
-    )
 
-    source = load_source_tables(spark, sf_dir)
-    timings: dict[str, float] = {}
-    noise: dict[str, float] = {}
+class Entry(NamedTuple):
+    """One bench entry.  ``build(ctx)`` returns the entry's DataFrame, or a
+    zero-argument callable for composite entries (subset runs, writes,
+    codebook training); ``act`` is the action timed on what it returns.
+    A timed run is ``act(build(ctx))``: the entry's own driver-side plan
+    building counts, the shared prep on ``ctx`` does not."""
 
-    def timed(name: str, fn, runs: int = 3):
-        fn()  # untimed warm-up: codegen + JIT for this plan shape
-        samples = []
-        for _ in range(runs):
-            t0 = time.time()
-            fn()
-            samples.append(time.time() - t0)
-        samples.sort()
-        med = samples[len(samples) // 2]
-        timings[name] = round(med, 3)
-        # within-run spread of the steady-state samples, as % of the median —
-        # the measured noise floor a cross-round delta must clear before it
-        # can be read as a real regression (NOISE_FLOOR.md records the
-        # between-run floor from back-to-back same-code runs)
-        noise[name] = round(100.0 * (samples[-1] - samples[0]) / med, 1)
+    build: Callable[["BenchContext"], Any]
+    act: Callable[[Any], Any]
 
-    # 1. flagship: full middle-out subset, 10% of orders, closure, report
-    def _flagship():
-        cfg = SubsetConfig.from_dict(
-            base_config_dict(
-                initial_targets=[
-                    {"table": "orders", "percent": 10, "sample_key": "o_orderkey"}
-                ],
-                passthrough_tables=["region"],
-            )
+
+def count(df):
+    return df.count()
+
+
+def collect(df):
+    return df.collect()
+
+
+def call(fn):
+    return fn()
+
+
+def summed(*cols: str):
+    """The act ``df.agg(sum(c) for c in cols).collect()``."""
+    return lambda df: df.agg(*(F.sum(c) for c in cols)).collect()
+
+
+def text_chars(df):
+    return df.agg(F.sum(F.length("text"))).collect()
+
+
+class BenchContext:
+    """The inputs and the untimed prep the entries share.
+
+    Each attribute is built on first use and memoized, so running one
+    entry builds only what that entry needs, and the first use falls in
+    the entry's untimed warm-up run.  ``held(df)`` persists a fixture for
+    the entry being timed; ``release()`` unpersists it once the entry is
+    done.  ``close()`` releases everything and removes the fixture
+    directories."""
+
+    def __init__(self, spark, sf_dir: str = SF_DIR) -> None:
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self._held: list = []
+        self._dirs: list[str] = []
+        self._seq = itertools.count(1)
+
+    def held(self, df):
+        if not df.is_cached:
+            df.persist().count()
+            self._held.append(df)
+        return df
+
+    def release(self) -> None:
+        for df in self._held:
+            df.unpersist()
+        self._held.clear()
+
+    def close(self) -> None:
+        self.release()
+        for d in self._dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        self._dirs.clear()
+
+    def _tempdir(self, prefix: str) -> str:
+        d = tempfile.mkdtemp(prefix=prefix)
+        self._dirs.append(d)
+        return d
+
+    def fresh(self, path: str, tag: str) -> str:
+        """A sibling of ``path`` no earlier call returned."""
+        return f"{path}_{tag}{next(self._seq)}"
+
+    # inputs
+    @cached_property
+    def source(self):
+        return load_source_tables(self.spark, self.sf_dir)
+
+    @cached_property
+    def docs(self):
+        return self.source["documents"]
+
+    @cached_property
+    def emb(self):
+        return self.source["embeddings"]
+
+    @cached_property
+    def events(self):
+        return self.source["events"]
+
+    @cached_property
+    def queries(self):
+        return self.emb.filter(F.col("vec_id") < 8)
+
+    @cached_property
+    def landed(self):
+        return self.docs.filter(F.col("doc_id") % 2 == 0)
+
+    @cached_property
+    def incoming(self):
+        return self.docs.filter(F.col("doc_id") % 2 == 1)
+
+    @cached_property
+    def eval_docs(self):
+        return self.docs.filter(F.col("doc_id") % 10 == 0) \
+            .select("doc_id", "text")
+
+    @cached_property
+    def url_docs(self):
+        # the fixture corpus has no URL column: messy shapes that exercise
+        # every normalization branch, with dup collisions on % 997
+        url = F.concat(
+            F.lit("https://WWW.Example.COM:443/s"),
+            (F.col("doc_id") % 97).cast("string"),
+            F.lit("/p/"),
+            (F.col("doc_id") % 997).cast("string"),
+            F.lit("/?b=2&a=1#f"),
         )
-        eng = SubsetEngine(spark, cfg, source, materialize="persist")
+        return self.docs.select("doc_id", url.alias("url"))
+
+    @cached_property
+    def media(self):
+        return multimodal.synthesize_media(self.docs)
+
+    @cached_property
+    def bm25_queries(self):
+        return lookup_df(
+            self.spark,
+            [(0, "the quick brown fox"), (1, "lorem ipsum dolor"),
+             (2, "data"), (3, "spark parquet shuffle")],
+            ["query_id", "query"])
+
+    # models, indexes and blooms: trained once, reused by every timed run
+    # (the amortized shape: one model serves every later shard)
+    @cached_property
+    def ivf(self):
+        return similarity.ivf_index(self.emb, n_centroids=16)
+
+    @cached_property
+    def unigram_lm(self):
+        return lm.train_unigram_lm(self.docs, vocab_size=4096)
+
+    @cached_property
+    def bpe_merges(self):
+        return bpe.train_bpe(self.docs, n_merges=200)
+
+    @cached_property
+    def dsir_target(self):
+        return dsir.train_hashed_ngram_lm(
+            self.docs.filter(F.col("lang") == "en"), dim=4096)
+
+    @cached_property
+    def dsir_raw(self):
+        return dsir.train_hashed_ngram_lm(self.docs, dim=4096)
+
+    @cached_property
+    def pq_books(self):
+        return pq.pq_train(self.emb, n_subspaces=8, n_codes=16)
+
+    @cached_property
+    def pq_encoded(self):
+        return pq.pq_encode(self.emb, self.pq_books)
+
+    @cached_property
+    def unigram_model(self):
+        return unigram.train_unigram(self.docs.limit(300), vocab_size=512,
+                                     n_iters=1)
+
+    @cached_property
+    def kn_trigram(self):
+        return tuple(t.localCheckpoint()
+                     for t in lm.train_kn_trigram_lm(self.docs,
+                                                     vocab_size=4096))
+
+    @cached_property
+    def kn5(self):
+        return tuple(t.localCheckpoint()
+                     for t in lm.train_kn5_lm(self.docs, vocab_size=4096))
+
+    @cached_property
+    def shingle_bloom(self):
+        return dedup.build_shingle_bloom(self.eval_docs, n=8)
+
+    # blooms build once per landed-corpus cadence and amortize across every
+    # micro-batch (STRESS stage 25 prices the build separately)
+    @cached_property
+    def line_bloom(self):
+        return textdedup.build_line_bloom(self.landed)
+
+    @cached_property
+    def kgram_bloom(self):
+        return textdedup.build_kgram_bloom(self.landed, k=10)
+
+    # on-disk fixtures, written once
+    @cached_property
+    def warc_dir(self) -> str:
+        d = self._tempdir("bench_warc_")
+        rows = self.docs.select("doc_id", "text").orderBy("doc_id") \
+            .limit(8000).collect()
+        for shard in range(4):
+            sources.write_warc_file(
+                ((f"http://site{r.doc_id % 37}.example/p/{r.doc_id}",
+                  r.text or "") for r in rows if r.doc_id % 4 == shard),
+                os.path.join(d, f"part{shard}.warc.gz"))
+        return d
+
+    @cached_property
+    def jsonl_dir(self) -> str:
+        d = os.path.join(self._tempdir("bench_jsonl_"), "shards")
+        sources.write_jsonl(self.docs.select("doc_id", "text", "lang"), d,
+                            n_files=int(CPUS))
+        return d
+
+    @cached_property
+    def surt_dir(self) -> str:
+        return self._tempdir("bench_surt_")
+
+    @cached_property
+    def compact_src(self) -> str:
+        # a skewed landing: one whale file + 8 tinies
+        src = os.path.join(self._tempdir("bench_compact_"), "landed")
+        self.docs.coalesce(1).write.parquet(src)
+        self.docs.limit(500).repartition(8).write.mode("append").parquet(src)
+        return src
+
+    @cached_property
+    def compact_healed(self) -> str:
+        healed = f"{self.compact_src}_healed"
+        layout.compact_landed(self.spark, self.compact_src, healed,
+                              target_mb_per_file=2.0)
+        return healed
+
+
+ENTRIES: dict[str, Entry] = {}
+
+
+def entry(name: str, build, act=count) -> None:
+    assert name not in ENTRIES, name
+    ENTRIES[name] = Entry(build, act)
+
+
+# stand-in models: the corpus pass is identical for any trained weights
+_rnd = random.Random(7)
+QUALITY_MODEL = quality.QualityModel(
+    weights=[round(_rnd.uniform(-1.0, 1.0), 6) for _ in range(256)],
+    bias=0.5, dim=256,
+)
+_rnd = random.Random(11)
+LANGID_MODEL = langid.LanguageModel(
+    classes=["de", "en", "es", "fr"],
+    weights=[[round(_rnd.uniform(-1.0, 1.0), 6) for _ in range(256)]
+             for _ in range(4)],
+    biases=[0.0] * 4,
+    dim=256, ngram=3, max_chars=1000,
+)
+BADWORDS = tuple(f"badword{i}" for i in range(200)) + ("lorem",)
+
+
+def _subset_config(**extra):
+    # 10% of orders plus the FK closure
+    return SubsetConfig.from_dict(base_config_dict(
+        initial_targets=[
+            {"table": "orders", "percent": 10, "sample_key": "o_orderkey"}
+        ],
+        **extra,
+    ))
+
+
+# the flagship: full middle-out subset, closure and report
+def _middle_out_subset(c):
+    cfg = _subset_config(passthrough_tables=["region"])
+
+    def run():
+        eng = SubsetEngine(c.spark, cfg, c.source, materialize="persist")
         eng.run_middle_out()
         eng.report().count()
         eng.cleanup()
 
-    timed("middle_out_subset", _flagship)
+    return run
 
-    # 2. full middle-out with parquet phase barriers (the 100 TB write path)
-    def _flagship_parquet():
+
+entry("middle_out_subset", _middle_out_subset, call)
+
+
+# full middle-out with parquet phase barriers (the 100 TB write path)
+def _middle_out_parquet_sink(c):
+    cfg = _subset_config()
+
+    def run():
         tmp = tempfile.mkdtemp(prefix="bench_dest_")
         try:
-            cfg = SubsetConfig.from_dict(
-                base_config_dict(
-                    initial_targets=[
-                        {"table": "orders", "percent": 10,
-                         "sample_key": "o_orderkey"}
-                    ],
-                )
-            )
-            eng = SubsetEngine(
-                spark, cfg, source, dest_path=tmp, materialize="parquet"
-            )
-            eng.run_middle_out()
+            SubsetEngine(c.spark, cfg, c.source, dest_path=tmp,
+                         materialize="parquet").run_middle_out()
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    timed("middle_out_parquet_sink", _flagship_parquet)
+    return run
 
-    from condenser_spark.functions.dedup import near_dedup_documents
 
-    docs = source["documents"]
-    timed("exact_dedup", lambda: exact_dedup(docs).count())
-    timed("minhash_lsh_pairs",
-          lambda: minhash_lsh_pairs(docs, n=3, threshold=0.8).count())
-    timed("near_dedup_documents",
-          lambda: near_dedup_documents(docs, n=3, threshold=0.8).count())
-    timed("simhash_near_pairs",
-          lambda: simhash_near_pairs(docs, max_hamming=3).count())
-    timed("text_stats", lambda: text_stats(docs).count())
+entry("middle_out_parquet_sink", _middle_out_parquet_sink, call)
 
-    from condenser_spark.functions.corpus import (
-        pack_sequences,
-        pii_scrub,
-        tfidf_top_terms,
+entry("exact_dedup", lambda c: dedup.exact_dedup(c.docs))
+entry("minhash_lsh_pairs",
+      lambda c: dedup.minhash_lsh_pairs(c.docs, n=3, threshold=0.8))
+entry("near_dedup_documents",
+      lambda c: dedup.near_dedup_documents(c.docs, n=3, threshold=0.8))
+entry("simhash_near_pairs",
+      lambda c: dedup.simhash_near_pairs(c.docs, max_hamming=3))
+entry("text_stats", lambda c: text.text_stats(c.docs))
+entry("tfidf_top_terms", lambda c: corpus.tfidf_top_terms(c.docs, k=3))
+entry("pii_scrub", lambda c: corpus.pii_scrub(c.docs))
+entry("pack_sequences", lambda c: corpus.pack_sequences(c.docs))
+entry("brute_force_cosine_topk",
+      lambda c: similarity.brute_force_cosine_topk(
+          c.emb, c.queries, k=10, query_id_col="vec_id"))
+# the ANN scale path: SRP bucketing + exact re-rank
+entry("srp_cosine_topk",
+      lambda c: similarity.lsh_bucketed_cosine_topk(
+          c.emb, c.queries, k=10, dim=64, query_id_col="vec_id"))
+# the cold index build (seeding collect + Lloyd round + full cell
+# assignment) — a user of the ANN path pays this once per corpus before
+# any ivf_query number applies
+entry("ivf_index_build",
+      lambda c: similarity.ivf_index(c.emb, n_centroids=16).assigned)
+
+
+# IVF amortization shape: one persisted index, then the query batch (the
+# per-batch probe + re-rank cost a query loop pays)
+def _ivf_query(c):
+    c.held(c.ivf.assigned)
+    return similarity.ivf_query(c.ivf, c.queries, k=10, nprobe=4,
+                                query_id_col="vec_id")
+
+
+entry("ivf_query", _ivf_query)
+entry("embedding_dup_pairs",
+      lambda c: similarity.embedding_cosine_dup_pairs(c.emb, threshold=0.95))
+entry("session_stats", lambda c: session_stats(c.events))
+entry("windowed_event_counts", lambda c: windowed_event_counts(c.events))
+
+
+def _asof_join(c):
+    ev = c.events
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "ts", "user_id", "value")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id", "value")
+    return temporal.asof_join(purchases, clicks, on="user_id",
+                              tiebreak="event_id")
+
+
+entry("asof_join", _asof_join)
+entry("rolling_fingerprints", lambda c: text.rolling_fingerprints(c.docs))
+entry("shared_passages", lambda c: text.shared_passages(c.docs))
+entry("encode_tokens",
+      lambda c: corpus.encode_tokens(c.docs, corpus.build_vocab(c.docs)))
+entry("contamination_pairs",
+      lambda c: dedup.contamination_pairs(
+          c.docs.filter(F.col("doc_id") % 10 > 0),
+          c.docs.filter(F.col("doc_id") % 10 == 0), n=8))
+# Bloom-pruned decontamination over the same split: its value is cluster
+# shuffle volume, not single-node wall (STRESS.md stage 4: 0.96x at 5M
+# docs with bitwise-equal output)
+entry("decontaminate_bloom",
+      lambda c: dedup.decontaminate_bloom(
+          c.docs.filter(F.col("doc_id") % 10 > 0),
+          c.docs.filter(F.col("doc_id") % 10 == 0), n=8))
+entry("strip_repeated_blocks", lambda c: text.strip_repeated_blocks(c.docs))
+# corpus selection: global token-budget cut, per-group whale cap,
+# temperature-flattened language rebalance
+entry("take_token_budget",
+      lambda c: corpus.take_token_budget(c.docs, budget_tokens=200_000))
+entry("cap_per_group",
+      lambda c: corpus.cap_per_group(c.docs, max_docs=1_000,
+                                     group_col="source"))
+entry("temperature_mix",
+      lambda c: corpus.temperature_mix(c.docs, tau=0.5, source_col="lang"))
+# SemDeDup within-cell pairing: seeded+Lloyd, then with a prebuilt
+# codebook (the amortized shape every later shard's call takes)
+entry("semantic_dup_pairs",
+      lambda c: similarity.semantic_dup_pairs(c.emb, threshold=0.95,
+                                              n_centroids=16))
+entry("semantic_dup_pairs_prebuilt",
+      lambda c: similarity.semantic_dup_pairs(c.emb, threshold=0.95,
+                                              centroids=c.ivf.centroids))
+
+
+# corpus-version diff: the new snapshot is the current docs with every
+# 7th removed and every 5th edited
+def _snapshot_diff(c):
+    new = c.docs.filter(F.col("doc_id") % 7 != 0).withColumn(
+        "text",
+        F.when(F.col("doc_id") % 5 == 0,
+               F.concat(F.col("text"), F.lit(" v2")))
+        .otherwise(F.col("text")),
     )
+    return dedup.snapshot_diff(c.docs, new)
 
-    timed("tfidf_top_terms", lambda: tfidf_top_terms(docs, k=3).count())
-    timed("pii_scrub", lambda: pii_scrub(docs).count())
-    timed("pack_sequences", lambda: pack_sequences(docs).count())
 
-    emb = source["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8)
-    timed("brute_force_cosine_topk",
-          lambda: brute_force_cosine_topk(
-              emb, queries, k=10, query_id_col="vec_id").count())
+entry("snapshot_diff", _snapshot_diff)
+entry("quality_score",
+      lambda c: quality.score_documents(c.docs, QUALITY_MODEL),
+      summed("quality_logit"))
+entry("knn_label_vote",
+      lambda c: similarity.knn_label_vote(c.emb, c.queries, k=10,
+                                          query_id_col="vec_id"))
+entry("rp_project", lambda c: similarity.rp_project(c.emb, out_dim=16))
+# cost-based distributed ORDER BY rank (quantile-literal shards past the
+# row threshold; plain window below it)
+entry("global_rank",
+      lambda c: corpus.global_rank(c.docs, order_col="n_chars"))
+# quantile clamp -> fractional-epoch replication, the winsorize ->
+# expand_epochs half of mixture assembly
+entry("winsorize_expand_epochs",
+      lambda c: corpus.expand_epochs(
+          corpus.winsorize(c.docs, ["n_chars"]), epochs={},
+          source_col="lang", default_epochs=1.5))
+entry("train_unigram_lm",
+      lambda c: lm.train_unigram_lm(c.docs, vocab_size=4096))
+entry("lm_score_documents",
+      lambda c: lm.lm_score_documents(c.docs, c.held(c.unigram_lm)))
+# the timed cost is the per-DISTINCT-word Arrow stage + positional join-back
+entry("encode_bpe", lambda c: bpe.encode_bpe(c.docs, c.bpe_merges),
+      summed("n_bpe_tokens"))
 
-    from condenser_spark.functions.similarity import lsh_bucketed_cosine_topk
 
-    # the ANN scale path (added round 7): SRP bucketing + exact re-rank
-    timed("srp_cosine_topk",
-          lambda: lsh_bucketed_cosine_topk(
-              emb, queries, k=10, dim=64, query_id_col="vec_id").count())
-
-    from condenser_spark.functions.similarity import ivf_index, ivf_query
-
-    # the cold index-build cost as its own first-class entry (seeding
-    # collect + Lloyd round + full cell assignment) — a user evaluating the
-    # ANN path pays this once per corpus before any ivf_query number applies
-    def _ivf_build():
-        ivf_index(emb, n_centroids=16).assigned.count()
-
-    timed("ivf_index_build", _ivf_build)
-
-    # IVF amortization shape: one persisted index, then the query batch
-    # (the steady-state number is the per-batch probe+re-rank cost a query
-    # loop actually pays; the build is timed separately above)
-    ivf_idx = ivf_index(emb, n_centroids=16)
-    # persist() marks the plan in place (IvfIndex is frozen); the count
-    # materializes the cell assignment before the timed query batches
-    ivf_idx.assigned.persist()
-    ivf_idx.assigned.count()
-    timed("ivf_query",
-          lambda: ivf_query(ivf_idx, queries, k=10, nprobe=4,
-                            query_id_col="vec_id").count())
-    ivf_idx.assigned.unpersist()
-    timed("embedding_dup_pairs",
-          lambda: embedding_cosine_dup_pairs(emb, threshold=0.95).count())
-
-    ev = source["events"]
-    timed("session_stats", lambda: session_stats(ev).count())
-    timed("windowed_event_counts", lambda: windowed_event_counts(ev).count())
-
-    from condenser_spark.functions.corpus import build_vocab, encode_tokens
-    from condenser_spark.functions.dedup import contamination_pairs
-    from condenser_spark.functions.temporal import asof_join
-
-    def _asof():
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "event_id", "ts", "user_id", "value")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id", "value")
-        asof_join(purchases, clicks, on="user_id", tiebreak="event_id").count()
-
-    timed("asof_join", _asof)
-
-    from condenser_spark.functions.text import (
-        rolling_fingerprints,
-        shared_passages,
-    )
-
-    timed("rolling_fingerprints",
-          lambda: rolling_fingerprints(docs).count())
-    timed("shared_passages", lambda: shared_passages(docs).count())
-    timed("encode_tokens",
-          lambda: encode_tokens(docs, build_vocab(docs)).count())
-    timed("contamination_pairs",
-          lambda: contamination_pairs(
-              docs.filter(F.col("doc_id") % 10 > 0),
-              docs.filter(F.col("doc_id") % 10 == 0), n=8).count())
-
-    from condenser_spark.functions.dedup import decontaminate_bloom
-    from condenser_spark.functions.text import strip_repeated_blocks
-
-    # round-7 additions: Bloom-pruned decontamination (same split as the
-    # exact pair query above; at sf0.1 the fixed driver collect + filter
-    # build costs ~1 s so it reads SLOWER than the exact path — and since
-    # round 7's shingle-row materialization accelerated the exact path,
-    # the Bloom variant's value is CLUSTER shuffle volume, not single-node
-    # wall: STRESS.md stage 4 round-8 remeasurement, 0.96x at 5M docs with
-    # bitwise-equal output) and the cross-doc boilerplate strip
-    timed("decontaminate_bloom",
-          lambda: decontaminate_bloom(
-              docs.filter(F.col("doc_id") % 10 > 0),
-              docs.filter(F.col("doc_id") % 10 == 0), n=8).count())
-    timed("strip_repeated_blocks",
-          lambda: strip_repeated_blocks(docs).count())
-
-    from condenser_spark.functions.corpus import (
-        cap_per_group,
-        take_token_budget,
-        temperature_mix,
-    )
-
-    # round-8 corpus-selection family: global token-budget cut, per-group
-    # whale cap, temperature-flattened language rebalance
-    timed("take_token_budget",
-          lambda: take_token_budget(docs, budget_tokens=200_000).count())
-    timed("cap_per_group",
-          lambda: cap_per_group(docs, max_docs=1_000, group_col="source").count())
-    timed("temperature_mix",
-          lambda: temperature_mix(docs, tau=0.5, source_col="lang").count())
-
-    from condenser_spark.functions.dedup import snapshot_diff
-    from condenser_spark.functions.similarity import semantic_dup_pairs
-
-    # round-8 late additions: SemDeDup within-cell pairing (production
-    # seeded+Lloyd path) and the corpus-version diff (new snapshot =
-    # current docs with every 7th removed / every 5th edited)
-    timed("semantic_dup_pairs",
-          lambda: semantic_dup_pairs(emb, threshold=0.95,
-                                     n_centroids=16).count())
-    # the amortized shape: a prebuilt codebook (one seeding+Lloyd pass,
-    # outside the timed loop) turns every later shard's call into pure
-    # assignment + pairing — the cost model the docstring prescribes for
-    # multi-shard corpora
-    from condenser_spark.functions.similarity import ivf_index
-
-    _cents = ivf_index(emb, n_centroids=16).centroids
-    timed("semantic_dup_pairs_prebuilt",
-          lambda: semantic_dup_pairs(emb, threshold=0.95,
-                                     centroids=_cents).count())
-    new_snapshot = (
-        docs.filter(F.col("doc_id") % 7 != 0)
-        .withColumn(
-            "text",
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.col("text"), F.lit(" v2")))
-            .otherwise(F.col("text")),
-        )
-    )
-    timed("snapshot_diff",
-          lambda: snapshot_diff(docs, new_snapshot).count())
-
-    from condenser_spark.functions.quality import (
-        QualityModel,
-        score_documents,
-    )
-    from condenser_spark.functions.similarity import (
-        knn_label_vote,
-        rp_project,
-    )
-
-    # round-8 late additions: plan-literal quality scoring (stand-in
-    # weights — the corpus pass is identical for any trained model), kNN
-    # label vote over exact neighbors, JL projection (Arrow kernel)
-    import random as _random
-
-    _rnd = _random.Random(7)
-    _qm = QualityModel(
-        weights=[round(_rnd.uniform(-1.0, 1.0), 6) for _ in range(256)],
-        bias=0.5, dim=256,
-    )
-    timed("quality_score",
-          lambda: score_documents(docs, _qm)
-          .agg(F.sum("quality_logit")).collect())
-    timed("knn_label_vote",
-          lambda: knn_label_vote(emb, queries, k=10,
-                                 query_id_col="vec_id").count())
-    timed("rp_project",
-          lambda: rp_project(emb, out_dim=16).count())
-
-    from condenser_spark.functions.bpe import encode_bpe, train_bpe
-    from condenser_spark.functions.corpus import (
-        expand_epochs,
-        global_rank,
-        winsorize,
-    )
-    from condenser_spark.functions.lm import (
-        lm_score_documents,
-        train_unigram_lm,
-    )
-    from condenser_spark.functions.layout import write_zordered
-
-    # round-9 bench coverage for the round-8 operators that previously had
-    # only stress/test timing (VERDICT r8 "What's missing #2"): a regression
-    # in any of them now shows in the per-round BENCH diff.
-    # global_rank: the cost-based distributed ORDER BY rank (quantile-literal
-    # shards past the row threshold; plain window below it)
-    timed("global_rank",
-          lambda: global_rank(docs, order_col="n_chars").count())
-
-    # one combined selection-family entry: quantile clamp -> fractional-epoch
-    # replication, the winsorize->expand_epochs half of mixture assembly
-    timed("winsorize_expand_epochs",
-          lambda: expand_epochs(
-              winsorize(docs, ["n_chars"]), epochs={},
-              source_col="lang", default_epochs=1.5).count())
-
-    # round 18 (VERDICT r17 #6): the previously-untimed model builds get
-    # first-class entries mirroring ivf_index_build, so no amortized
-    # pre-computation sits entirely outside the timed surface
-    timed("train_unigram_lm",
-          lambda: train_unigram_lm(docs, vocab_size=4096).count())
-
-    # unigram-LM corpus scoring; the model trains ONCE outside the timed
-    # loop (the amortized shape — one model scores every later shard)
-    _lm = train_unigram_lm(docs, vocab_size=4096)
-    _lm.persist().count()
-    timed("lm_score_documents",
-          lambda: lm_score_documents(docs, _lm).count())
-
-    # BPE corpus encoding with pretrained merges (same amortization); the
-    # timed cost is the per-DISTINCT-word Arrow stage + positional join-back
-    _merges = train_bpe(docs, n_merges=200)
-    timed("encode_bpe",
-          lambda: encode_bpe(docs, _merges)
-          .agg(F.sum("n_bpe_tokens")).collect())
-    _lm.unpersist()
-
-    # Z-ordered parquet sink: bounds scan + range partition + in-file sort
-    def _zorder_write():
+# Z-ordered parquet sink: bounds scan + range partition + in-file sort
+def _write_zordered(c):
+    def run():
         tmp = tempfile.mkdtemp(prefix="bench_zorder_")
         try:
-            write_zordered(docs, tmp, ["n_chars", "doc_id"], n_files=16)
+            layout.write_zordered(c.docs, tmp, ["n_chars", "doc_id"],
+                                  n_files=16)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    timed("write_zordered", _zorder_write)
+    return run
 
-    from condenser_spark.functions.dsir import (
-        dsir_sample,
-        train_hashed_ngram_lm,
-    )
 
-    # round-9 addition: DSIR importance resampling (target = en docs); the
-    # two hashed-ngram LMs train once outside the timed loop (amortized
-    # shape, same as the unigram LM above) — the timed cost is the
-    # broadcast delta join + integer sum + distributed Gumbel top-k rank
-    timed("train_hashed_ngram_lm",
-          lambda: train_hashed_ngram_lm(docs.filter(F.col("lang") == "en"),
-                                        dim=4096).count())
-    _dsir_t = train_hashed_ngram_lm(docs.filter(F.col("lang") == "en"),
-                                    dim=4096)
-    _dsir_r = train_hashed_ngram_lm(docs, dim=4096)
-    _dsir_t.persist().count()
-    _dsir_r.persist().count()
-    timed("dsir_sample",
-          lambda: dsir_sample(docs, 1_000, _dsir_t, _dsir_r,
-                              dim=4096).count())
-    _dsir_t.unpersist()
-    _dsir_r.unpersist()
+entry("write_zordered", _write_zordered, call)
+# DSIR importance resampling (target = en docs): the timed cost is the
+# broadcast delta join + integer sum + distributed Gumbel top-k rank
+entry("train_hashed_ngram_lm",
+      lambda c: dsir.train_hashed_ngram_lm(
+          c.docs.filter(F.col("lang") == "en"), dim=4096))
+entry("dsir_sample",
+      lambda c: dsir.dsir_sample(c.docs, 1_000, c.held(c.dsir_target),
+                                 c.held(c.dsir_raw), dim=4096))
+# product quantization: codebooks train on the driver (numpy over a
+# hash-ordered sample); the timed query is the LUT-literal ADC scan over
+# the persisted codes + exact re-rank of the candidate pool
+entry("pq_train",
+      lambda c: lambda: pq.pq_train(c.emb, n_subspaces=8, n_codes=16), call)
+entry("pq_encode", lambda c: pq.pq_encode(c.emb, c.pq_books))
+entry("pq_topk_rerank",
+      lambda c: pq.pq_topk(c.held(c.pq_encoded), c.queries, c.pq_books,
+                           k=10, query_id_col="vec_id", rerank_with=c.emb,
+                           rerank_candidates=100))
+# plan-literal language id: char trigrams over the first 1000 chars
+entry("language_top1",
+      lambda c: langid.language_top1(c.docs, LANGID_MODEL),
+      lambda df: df.groupBy("lang_pred").count().collect())
+entry("exact_substring_dedup",
+      lambda c: text.exact_substring_dedup(c.docs, k=20),
+      summed("n_removed_tokens"))
+entry("dedup_lines", lambda c: text.dedup_lines(c.docs, keep="first"),
+      summed("n_removed_lines"))
+# a small curate_corpus chain: the composer's lazy-plan machinery
+entry("curate_small",
+      lambda c: curate_corpus(c.docs, c4=True, gopher={"min_stop_hits": 1},
+                              dedup="exact", report=False,
+                              barrier=False)[0])
+entry("bm25_topk",
+      lambda c: retrieval.bm25_topk(c.docs, c.bm25_queries, k=10))
+entry("contamination_fraction",
+      lambda c: dedup.contamination_fraction(
+          c.docs.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text"),
+          c.eval_docs, n=8, bloom=c.shingle_bloom),
+      summed("n_contaminated"))
+entry("collocation_scores",
+      lambda c: corpus.collocation_scores(c.docs, min_count=40))
+entry("knn_graph",
+      lambda c: similarity.knn_graph(c.emb, k=10, n_centroids=16))
+entry("prototype_prune",
+      lambda c: similarity.prototype_prune(c.emb, keep_fraction=0.5, k=10,
+                                           n_centroids=16))
+entry("bigram_lm_score",
+      lambda c: lm.bigram_score_documents(
+          c.docs, *lm.train_bigram_lm(c.docs, vocab_size=4096)),
+      summed("lm2_logprob4_sum"))
+entry("url_curation",
+      lambda c: urls.curate_urls(c.url_docs, blocked_domains=["bad.com"]),
+      lambda df: df.agg(F.count("url_norm"),
+                        F.sum(F.col("url_blocked").cast("int"))).collect())
+entry("url_dedup", lambda c: urls.url_dedup(c.url_docs))
+# the stream dedup kernels, each building its landed-corpus bloom
+entry("dedup_lines_stream",
+      lambda c: textdedup.dedup_lines_stream(
+          c.incoming, textdedup.build_line_bloom(c.landed)),
+      summed("n_removed_lines"))
+entry("exact_substring_stream",
+      lambda c: textdedup.exact_substring_stream(
+          c.incoming, textdedup.build_kgram_bloom(c.landed, k=10), k=10),
+      summed("n_removed_tokens"))
+entry("unimax_weights",
+      lambda c: corpus.unimax_weights(
+          c.docs.withColumn("tok", text.token_count("text")),
+          budget=40_000, max_epochs=2, group_col="lang", size_col="tok"),
+      collect)
 
-    from condenser_spark.functions.pq import pq_encode, pq_topk, pq_train
 
-    # round-9 addition: product-quantization ANN — the 8-byte-codes scan
-    # that replaces the embedding table in candidate search; codebooks
-    # train once (driver numpy over a hash-ordered sample), the encoded
-    # table persists, and the timed query is the LUT-literal ADC scan +
-    # exact re-rank of the candidate pool
-    timed("pq_train", lambda: pq_train(emb, n_subspaces=8, n_codes=16))
-    _pq_books = pq_train(emb, n_subspaces=8, n_codes=16)
-    timed("pq_encode", lambda: pq_encode(emb, _pq_books).count())
-    _pq_enc = pq_encode(emb, _pq_books)
-    _pq_enc.persist().count()
-    timed("pq_topk_rerank",
-          lambda: pq_topk(_pq_enc, queries, _pq_books, k=10,
-                          query_id_col="vec_id", rerank_with=emb,
-                          rerank_candidates=100).count())
-    _pq_enc.unpersist()
+def _rrf_fuse(c):
+    docs = c.docs
+    wa = Window.partitionBy("lang").orderBy(
+        text.token_count("text").desc(), F.col("doc_id").asc())
+    a = (docs.select(F.col("lang").alias("query_id"), "doc_id",
+                     F.row_number().over(wa).alias("rank"))
+         .filter(F.col("rank") <= 20))
+    wb = Window.partitionBy("lang").orderBy(
+        F.col("n_chars").asc(), F.col("doc_id").asc())
+    b = (docs.select(F.col("lang").alias("query_id"), "doc_id",
+                     F.row_number().over(wb).alias("rank"))
+         .filter(F.col("rank") <= 15))
+    return retrieval.rrf_fuse([a, b], k=60, topk=10)
 
-    # round-10 additions: plan-literal language identification (stand-in
-    # per-class weights — the corpus pass is identical for any trained
-    # model; char trigrams over the first 1000 normalized chars), and a
-    # small curate_corpus chain so the composer's lazy-plan machinery
-    # carries a noise-tracked regression signal (VERDICT r9 missing #3)
-    from condenser_spark.curate import curate_corpus
-    from condenser_spark.functions.langid import (
-        LanguageModel,
-        language_top1,
-    )
 
-    _lrnd = _random.Random(11)
-    _lid = LanguageModel(
-        classes=["de", "en", "es", "fr"],
-        weights=[[round(_lrnd.uniform(-1.0, 1.0), 6) for _ in range(256)]
-                 for _ in range(4)],
-        biases=[0.0] * 4,
-        dim=256, ngram=3, max_chars=1000,
-    )
-    timed("language_top1",
-          lambda: language_top1(docs, _lid)
-          .groupBy("lang_pred").count().collect())
+entry("rrf_fuse", _rrf_fuse)
+entry("soft_dedup_weights",
+      lambda c: dedup.soft_dedup_weights(c.docs, n=3, threshold=0.8),
+      summed("sample_weight"))
+entry("zipf_fit", lambda c: corpus.zipf_fit(c.docs), collect)
+entry("diversity_stats", lambda c: text.diversity_stats(c.docs),
+      summed("distinct_3"))
+entry("winnow_fingerprints",
+      lambda c: text.winnow_fingerprints(c.docs, window=4, winnow=5))
+entry("winnow_overlap",
+      lambda c: text.winnow_overlap_pairs(c.docs, window=4, winnow=5,
+                                          min_shared=1))
+entry("corpus_overlap",
+      lambda c: dedup.corpus_overlap(c.docs.filter("doc_id >= 50"),
+                                     c.docs.filter("doc_id < 100"), n=8),
+      collect)
+entry("corpus_overlap_sketch",
+      lambda c: dedup.corpus_overlap(c.docs.filter("doc_id >= 50"),
+                                     c.docs.filter("doc_id < 100"), n=8,
+                                     approx=True),
+      collect)
+# the stream chain with prebuilt blooms: the per-batch production path
+entry("curate_stream",
+      lambda c: curate_stream(c.incoming, line_bloom=c.line_bloom,
+                              kgram_bloom=c.kgram_bloom, k=10, gopher=True),
+      summed("es_removed_tokens"))
+entry("curate_stream_div",
+      lambda c: curate_stream(c.incoming, line_bloom=c.line_bloom,
+                              diversity={"min_ratio_2": 0.3}),
+      summed("dv_distinct_2"))
+# the line-dedup kernel + c4 line cleaning + doc gate end to end
+entry("curate_stream_c4",
+      lambda c: curate_stream(c.incoming, line_bloom=c.line_bloom, c4=True),
+      text_chars)
+# the complete Gopher A1.2 table (12 rules incl. the vectorized
+# dup-5..10-gram coverage kernel) and the C4 bad-words regex gate
+entry("gopher_repetition_full",
+      lambda c: textdedup.gopher_repetition_stateless(c.docs),
+      summed("dup_5gram_char_frac"))
+entry("badwords_gate", lambda c: text.badwords_flags(c.docs, BADWORDS),
+      lambda df: df.filter("badwords_hit").count())
+entry("fineweb_flags", lambda c: text.fineweb_quality_flags(c.docs),
+      lambda df: df.filter("fineweb_pass").count())
+entry("code_flags", lambda c: text.code_quality_flags(c.docs),
+      lambda df: df.filter("code_pass").count())
 
-    from condenser_spark.functions.text import (
-        dedup_lines,
-        exact_substring_dedup,
-    )
 
-    timed("exact_substring_dedup",
-          lambda: exact_substring_dedup(docs, k=20)
-          .agg(F.sum("n_removed_tokens")).collect())
-    timed("dedup_lines",
-          lambda: dedup_lines(docs, keep="first")
-          .agg(F.sum("n_removed_lines")).collect())
-
-    def _curate_small():
-        out, _ = curate_corpus(docs, c4=True, gopher={"min_stop_hits": 1},
-                               dedup="exact", report=False, barrier=False)
-        return out.count()
-
-    timed("curate_small", _curate_small)
-
-    from condenser_spark.functions.retrieval import bm25_topk
-
-    from condenser_spark.registry import lookup_df
-
-    _bm_queries = lookup_df(
-        spark,
-        [(0, "the quick brown fox"), (1, "lorem ipsum dolor"),
-         (2, "data"), (3, "spark parquet shuffle")],
-        ["query_id", "query"])
-    timed("bm25_topk",
-          lambda: bm25_topk(docs, _bm_queries, k=10).count())
-
-    from condenser_spark.functions.corpus import collocation_scores
-    from condenser_spark.functions.dedup import (
-        build_shingle_bloom,
-        contamination_fraction,
-    )
-
-    _ev = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text")
-    _tr = docs.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
-    _bloom = build_shingle_bloom(_ev, n=8)
-    timed("contamination_fraction",
-          lambda: contamination_fraction(_tr, _ev, n=8, bloom=_bloom)
-          .agg(F.sum("n_contaminated")).collect())
-    timed("collocation_scores",
-          lambda: collocation_scores(docs, min_count=40).count())
-
-    from condenser_spark.functions.similarity import knn_graph, prototype_prune
-
-    timed("knn_graph",
-          lambda: knn_graph(emb, k=10, n_centroids=16).count())
-    timed("prototype_prune",
-          lambda: prototype_prune(emb, keep_fraction=0.5, k=10,
-                                  n_centroids=16).count())
-
-    from condenser_spark.functions.lm import (
-        bigram_score_documents,
-        train_bigram_lm,
-    )
-
-    def _bigram_lm():
-        uni, bi = train_bigram_lm(docs, vocab_size=4096)
-        return (bigram_score_documents(docs, uni, bi)
-                .agg(F.sum("lm2_logprob4_sum")).collect())
-
-    timed("bigram_lm_score", _bigram_lm)
-
-    from condenser_spark.functions.urls import curate_urls, url_dedup
-
-    # synthetic URL column (the fixture corpus has none): messy shapes that
-    # exercise every normalization branch, with dup collisions on % 997
-    _url = F.concat(
-        F.lit("https://WWW.Example.COM:443/s"),
-        (F.col("doc_id") % 97).cast("string"),
-        F.lit("/p/"),
-        (F.col("doc_id") % 997).cast("string"),
-        F.lit("/?b=2&a=1#f"),
-    )
-    _udocs = docs.select("doc_id", _url.alias("url"))
-    timed("url_curation",
-          lambda: curate_urls(_udocs, blocked_domains=["bad.com"])
-          .agg(F.count("url_norm"),
-               F.sum(F.col("url_blocked").cast("int"))).collect())
-    timed("url_dedup", lambda: url_dedup(_udocs).count())
-
-    from condenser_spark.streaming.textdedup import (
-        build_kgram_bloom,
-        build_line_bloom,
-        dedup_lines_stream,
-        exact_substring_stream,
-    )
-
-    _landed = docs.filter(F.col("doc_id") % 2 == 0)
-    _incoming = docs.filter(F.col("doc_id") % 2 == 1)
-
-    def _line_stream():
-        blm = build_line_bloom(_landed)
-        return (dedup_lines_stream(_incoming, blm)
-                .agg(F.sum("n_removed_lines")).collect())
-
-    def _esub_stream():
-        blm = build_kgram_bloom(_landed, k=10)
-        return (exact_substring_stream(_incoming, blm, k=10)
-                .agg(F.sum("n_removed_tokens")).collect())
-
-    timed("dedup_lines_stream", _line_stream)
-    timed("exact_substring_stream", _esub_stream)
-
-    from condenser_spark.functions.corpus import unimax_weights
-    from condenser_spark.functions.text import token_count
-
-    timed("unimax_weights",
-          lambda: unimax_weights(
-              docs.withColumn("tok", token_count("text")),
-              budget=40_000, max_epochs=2, group_col="lang",
-              size_col="tok").collect())
-
-    from pyspark.sql import Window as _W
-
-    from condenser_spark.functions.retrieval import rrf_fuse
-
-    def _rrf():
-        wa = _W.partitionBy("lang").orderBy(
-            token_count("text").desc(), F.col("doc_id").asc())
-        a = (docs.select(F.col("lang").alias("query_id"), "doc_id",
-                         F.row_number().over(wa).alias("rank"))
-             .filter(F.col("rank") <= 20))
-        wb = _W.partitionBy("lang").orderBy(
-            F.col("n_chars").asc(), F.col("doc_id").asc())
-        b = (docs.select(F.col("lang").alias("query_id"), "doc_id",
-                         F.row_number().over(wb).alias("rank"))
-             .filter(F.col("rank") <= 15))
-        return rrf_fuse([a, b], k=60, topk=10).count()
-
-    timed("rrf_fuse", _rrf)
-
-    from condenser_spark.functions.dedup import soft_dedup_weights
-
-    timed("soft_dedup_weights",
-          lambda: soft_dedup_weights(docs, n=3, threshold=0.8)
-          .agg(F.sum("sample_weight")).collect())
-
-    from condenser_spark.functions.corpus import zipf_fit
-    from condenser_spark.functions.text import diversity_stats
-
-    timed("zipf_fit", lambda: zipf_fit(docs).collect())
-    timed("diversity_stats",
-          lambda: diversity_stats(docs)
-          .agg(F.sum("distinct_3")).collect())
-
-    from condenser_spark.functions.text import winnow_fingerprints
-
-    timed("winnow_fingerprints",
-          lambda: winnow_fingerprints(docs, window=4, winnow=5).count())
-
-    from condenser_spark.functions.text import winnow_overlap_pairs
-
-    timed("winnow_overlap",
-          lambda: winnow_overlap_pairs(docs, window=4, winnow=5,
-                                       min_shared=1).count())
-
-    from condenser_spark.functions.dedup import corpus_overlap
-
-    timed("corpus_overlap",
-          lambda: corpus_overlap(docs.filter("doc_id >= 50"),
-                                 docs.filter("doc_id < 100"),
-                                 n=8).collect())
-    timed("corpus_overlap_sketch",
-          lambda: corpus_overlap(docs.filter("doc_id >= 50"),
-                                 docs.filter("doc_id < 100"),
-                                 n=8, approx=True).collect())
-
-    from condenser_spark.streaming.curate import curate_stream
-
-    # blooms build once per landed-corpus cadence and amortize across
-    # every micro-batch (STRESS stage 25 prices the build separately) —
-    # the timed path is the per-batch chain, the production steady state
-    _blm_l = build_line_bloom(_landed)
-    _blm_k = build_kgram_bloom(_landed, k=10)
-    timed("curate_stream",
-          lambda: curate_stream(_incoming, line_bloom=_blm_l,
-                                kgram_bloom=_blm_k, k=10, gopher=True)
-          .agg(F.sum("es_removed_tokens")).collect())
-
-    timed("curate_stream_div",
-          lambda: curate_stream(_incoming, line_bloom=_blm_l,
-                                diversity={"min_ratio_2": 0.3})
-          .agg(F.sum("dv_distinct_2")).collect())
-
-    # round 18 (VERDICT r17 #4): the stream chain's C4 gate — the one
-    # composer stage whose filter sits above an Arrow kernel with no
-    # bench coverage; this times the line-dedup kernel + c4 line
-    # cleaning + doc gate end to end
-    timed("curate_stream_c4",
-          lambda: curate_stream(_incoming, line_bloom=_blm_l, c4=True)
-          .agg(F.sum(F.length("text"))).collect())
-
-    # round 13: the COMPLETE A1.2 table (12 rules incl. the vectorized
-    # dup-5..10-gram coverage kernel) and the C4 bad-words regex gate.
-    # These are the 67th+ entries — the final line's 2-dp query map now
-    # exceeds the 1800-char bound and the tested map-drop fallback is IN
-    # FORCE: per-query values live in the detail line's `queries_full`.
-    from condenser_spark.streaming.textdedup import (
-        gopher_repetition_stateless,
-    )
-
-    timed("gopher_repetition_full",
-          lambda: gopher_repetition_stateless(docs)
-          .agg(F.sum(F.col("dup_5gram_char_frac"))).collect())
-
-    from condenser_spark.functions.text import badwords_flags
-
-    _bw = tuple(f"badword{i}" for i in range(200)) + ("lorem",)
-    timed("badwords_gate",
-          lambda: badwords_flags(docs, _bw)
-          .filter("badwords_hit").count())
-
-    from condenser_spark.functions.text import fineweb_quality_flags
-
-    timed("fineweb_flags",
-          lambda: fineweb_quality_flags(docs)
-          .filter("fineweb_pass").count())
-
-    # round 14: The Stack's code rules, HTML extraction, WARC parsing,
-    # and the SURT-partitioned write — all past the final line's query
-    # map (the map-drop fallback stays in force; see queries_full)
-    from condenser_spark.functions.text import code_quality_flags
-
-    timed("code_flags",
-          lambda: code_quality_flags(docs)
-          .filter("code_pass").count())
-
-    from condenser_spark.functions.html import extract_html_text
-
-    # wrap the corpus in realistic markup JVM-side (untimed part of the
-    # plan's scan), then time the Arrow extraction kernel end-to-end
-    _hdocs = docs.select(
+# the corpus wrapped in realistic markup JVM-side, then the Arrow
+# extraction kernel
+def _html_extract(c):
+    hdocs = c.docs.select(
         "doc_id",
         F.concat(
             F.lit('<html><head><title>d</title><style>p{}</style>'
@@ -854,175 +863,125 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
             F.col("text"),
             F.lit('</p><script>t()</script></body></html>'),
         ).alias("text"))
-    timed("html_extract",
-          lambda: extract_html_text(_hdocs, drop_nav=True)
-          .agg(F.sum(F.length("text"))).collect())
+    return html.extract_html_text(hdocs, drop_nav=True)
 
-    # WARC parse: fixture files built once (driver-side prep, untimed);
-    # the timed path is the binaryFile + streaming-gzip parse
-    from condenser_spark.sources import read_warc, write_warc_file
 
-    _warc_dir = tempfile.mkdtemp(prefix="bench_warc_")
-    _wrows = docs.select("doc_id", "text").orderBy("doc_id") \
-        .limit(8000).collect()
-    for _shard in range(4):
-        write_warc_file(
-            ((f"http://site{r.doc_id % 37}.example/p/{r.doc_id}",
-              r.text or "") for r in _wrows if r.doc_id % 4 == _shard),
-            os.path.join(_warc_dir, f"part{_shard}.warc.gz"))
-    timed("warc_read",
-          lambda: read_warc(spark, _warc_dir)
-          .agg(F.sum("n_payload_bytes")).collect())
+entry("html_extract", _html_extract, text_chars)
+# the binaryFile + streaming-gzip parse of prebuilt WARC files
+entry("warc_read", lambda c: sources.read_warc(c.spark, c.warc_dir),
+      summed("n_payload_bytes"))
+entry("surt_write",
+      lambda c: lambda: layout.write_surt_partitioned(
+          c.url_docs, c.surt_dir, n_files=8),
+      call)
+entry("normalize_text",
+      lambda c: text.normalize_text(c.docs, form="NFKC"), text_chars)
+entry("pii_redact", lambda c: pii.redact_pii(c.docs, counts=True),
+      lambda df: df.agg(F.sum(F.length("text")),
+                        F.sum("pii_email_n")).collect())
+# the native json scan of prebuilt shards with an explicit schema
+entry("jsonl_read",
+      lambda c: sources.read_jsonl(c.spark, c.jsonl_dir,
+                                   "doc_id long, text string, lang string"),
+      text_chars)
+# the CCNet split, approx (scale) mode: one agg + broadcast join
+entry("quantile_buckets",
+      lambda c: corpus.quantile_buckets(c.docs, "n_chars", n_buckets=3,
+                                        group_col="lang", mode="approx"),
+      lambda df: df.groupBy("bucket").count().collect())
 
-    from condenser_spark.functions.layout import write_surt_partitioned
 
-    _surt_out = tempfile.mkdtemp(prefix="bench_surt_")
-    timed("surt_write",
-          lambda: write_surt_partitioned(_udocs, _surt_out, n_files=8))
-
-    from condenser_spark.functions.text import normalize_text
-
-    timed("normalize_text",
-          lambda: normalize_text(docs, form="NFKC")
-          .agg(F.sum(F.length("text"))).collect())
-
-    from condenser_spark.functions.pii import redact_pii
-
-    timed("pii_redact",
-          lambda: redact_pii(docs, counts=True)
-          .agg(F.sum(F.length("text")), F.sum("pii_email_n")).collect())
-
-    # JSONL ingest: shards written once (untimed prep), the timed path
-    # is the native json scan with explicit schema + an aggregate
-    from condenser_spark.sources import read_jsonl, write_jsonl
-
-    _jsonl_dir = os.path.join(tempfile.mkdtemp(prefix="bench_jsonl_"),
-                              "shards")
-    write_jsonl(docs.select("doc_id", "text", "lang"), _jsonl_dir,
-                n_files=int(CPUS))
-    timed("jsonl_read",
-          lambda: read_jsonl(spark, _jsonl_dir,
-                             "doc_id long, text string, lang string")
-          .agg(F.sum(F.length("text"))).collect())
-
-    from condenser_spark.functions.corpus import quantile_buckets
-
-    # the CCNet split, approx (scale) mode: one agg + broadcast join
-    timed("quantile_buckets",
-          lambda: quantile_buckets(docs, "n_chars", n_buckets=3,
-                                   group_col="lang", mode="approx")
-          .groupBy("bucket").count().collect())
-
-    # round 15: image perceptual-hash near-dup (pHash + Hamming-band
-    # join), unigram-LM tokenizer encode, and the landed-corpus
-    # compaction pass
-    from condenser_spark.functions.multimodal import (
-        media_dup_pairs,
-        synthesize_media,
-    )
-
-    _media = synthesize_media(docs)
-    _clones = _media.filter(F.col("media_id") % 10 == 0).withColumn(
+# image perceptual-hash near-dup over the media with every 10th cloned
+def _phash_pairs(c):
+    clones = c.media.filter(F.col("media_id") % 10 == 0).withColumn(
         "media_id", F.col("media_id") + F.lit(1_000_000))
-    _media_all = _media.unionByName(_clones)
-    timed("phash_pairs",
-          lambda: media_dup_pairs(_media_all, method="phash",
-                                  max_hamming=8).count())
+    return multimodal.media_dup_pairs(c.media.unionByName(clones),
+                                      method="phash", max_hamming=8)
 
-    from condenser_spark.functions.unigram import (
-        encode_unigram,
-        train_unigram,
-    )
 
-    # model trains ONCE outside the timed loop (the amortized shape);
-    # the timed cost is the per-DISTINCT-word Viterbi Arrow stage +
-    # positional join-back, the encode_bpe twin
-    _umodel = train_unigram(docs.limit(300), vocab_size=512, n_iters=1)
-    timed("encode_unigram",
-          lambda: encode_unigram(docs, _umodel).count())
+entry("phash_pairs", _phash_pairs)
+# per-DISTINCT-word Viterbi Arrow stage + positional join-back
+entry("encode_unigram",
+      lambda c: unigram.encode_unigram(c.docs, c.unigram_model))
+# the skewed landing compacted to a fresh dest per run, then the
+# incremental re-pass over a healed landing (every shard already in range
+# byte-copies: the maintenance regime's no-op cost)
+entry("compact_landed",
+      lambda c: lambda: layout.compact_landed(
+          c.spark, c.compact_src, c.fresh(c.compact_src, "out"),
+          target_mb_per_file=2.0),
+      call)
+entry("compact_incremental",
+      lambda c: lambda: layout.compact_landed(
+          c.spark, c.compact_healed, c.fresh(c.compact_src, "incr"),
+          target_mb_per_file=2.0, incremental=True),
+      call)
+# Kneser-Ney scoring, trigram and the published 5-gram order, batch and
+# the stream-legal twins (element_at extraction + stream-static joins)
+entry("kn_trigram_score",
+      lambda c: lm.kn_trigram_score_documents(c.docs, *c.kn_trigram),
+      summed("lm3_logprob4_sum"))
+entry("kn5_score", lambda c: lm.kn5_score_documents(c.docs, *c.kn5),
+      summed("lm5_logprob4_sum"))
+entry("kn_trigram_score_stream",
+      lambda c: lm.kn_trigram_score_documents_stream(c.docs, *c.kn_trigram),
+      summed("lm3_logprob4_sum"))
+entry("kn5_score_stream",
+      lambda c: lm.kn5_score_documents_stream(c.docs, *c.kn5),
+      summed("lm5_logprob4_sum"))
 
-    from condenser_spark.functions.layout import compact_landed
 
-    # skewed landing built once (untimed prep: one whale + 8 tinies);
-    # each timed run compacts to a fresh dest
-    _cl_src = os.path.join(tempfile.mkdtemp(prefix="bench_compact_"),
-                           "landed")
-    docs.coalesce(1).write.parquet(_cl_src)
-    docs.limit(500).repartition(8).write.mode("append").parquet(_cl_src)
-    _cl_seq = {"i": 0}
-
-    def _compact_once():
-        _cl_seq["i"] += 1
-        compact_landed(spark, _cl_src,
-                       f"{_cl_src}_out{_cl_seq['i']}",
-                       target_mb_per_file=2.0)
-
-    timed("compact_landed", _compact_once)
-
-    # round 16: incremental re-pass over a HEALED landing (every shard
-    # already in range byte-copies; no Spark job — the maintenance
-    # regime's no-op cost, previously STRESS-only)
-    _cl_healed = f"{_cl_src}_healed"
-    compact_landed(spark, _cl_src, _cl_healed, target_mb_per_file=2.0)
-
-    def _compact_incr():
-        _cl_seq["i"] += 1
-        compact_landed(spark, _cl_healed,
-                       f"{_cl_src}_incr{_cl_seq['i']}",
-                       target_mb_per_file=2.0, incremental=True)
-
-    timed("compact_incremental", _compact_incr)
-
-    # round 16: Kneser-Ney trigram scoring (the published CCNet
-    # perplexity form) — model trains ONCE outside the timed loop (the
-    # amortized shape, as encode_unigram); timed cost is the broadcast
-    # unigram join + lag window + three observed-gram equi-joins
-    from condenser_spark.functions.lm import (
-        kn_trigram_score_documents,
-        train_kn_trigram_lm,
-    )
-
-    _kn = tuple(t.localCheckpoint()
-                for t in train_kn_trigram_lm(docs, vocab_size=4096))
-    timed("kn_trigram_score",
-          lambda: kn_trigram_score_documents(docs, *_kn)
-          .agg(F.sum("lm3_logprob4_sum")).collect())
-
-    # round 17: the published 5-gram order (same amortized-train shape;
-    # timed cost adds the two extra gram/gamma equi-joins) plus the
-    # stream-legal twin (element_at extraction + stream-static joins +
-    # micro-batch fold — the ingest-time cost of the same signal)
-    from condenser_spark.functions.lm import (
-        kn5_score_documents,
-        kn5_score_documents_stream,
-        kn_trigram_score_documents_stream,
-        train_kn5_lm,
-    )
-
-    _kn5 = tuple(t.localCheckpoint()
-                 for t in train_kn5_lm(docs, vocab_size=4096))
-    timed("kn5_score",
-          lambda: kn5_score_documents(docs, *_kn5)
-          .agg(F.sum("lm5_logprob4_sum")).collect())
-    timed("kn_trigram_score_stream",
-          lambda: kn_trigram_score_documents_stream(docs, *_kn)
-          .agg(F.sum("lm3_logprob4_sum")).collect())
-    timed("kn5_score_stream",
-          lambda: kn5_score_documents_stream(docs, *_kn5)
-          .agg(F.sum("lm5_logprob4_sum")).collect())
-
-    # round 16: video temporal-fingerprint near-dup — frame dHash
-    # sequences, stride-1 window signatures, banded join + per-pair agg
-    from condenser_spark.functions.multimodal import video_dup_pairs
-
-    _vids = _media.filter(F.col("kind") == "video")
-    _vclones = _vids.filter(F.col("media_id") % 10 == 2).withColumn(
+# video temporal-fingerprint near-dup: frame dHash sequences, stride-1
+# window signatures, banded join + per-pair agg
+def _video_fp_pairs(c):
+    vids = c.media.filter(F.col("kind") == "video")
+    clones = vids.filter(F.col("media_id") % 10 == 2).withColumn(
         "media_id", F.col("media_id") + F.lit(1_000_000))
-    timed("video_fp_pairs",
-          lambda: video_dup_pairs(_vids.unionByName(_vclones),
-                                  window=4, max_hamming=6).count())
+    return multimodal.video_dup_pairs(vids.unionByName(clones), window=4,
+                                      max_hamming=6)
 
+
+entry("video_fp_pairs", _video_fp_pairs)
+
+
+def time_entry(ctx: BenchContext, name: str, runs: int = 3) -> list[float]:
+    """Sorted wall times of ``runs`` runs of entry ``name``, after one
+    untimed warm-up run (codegen + JIT for the plan shape, and the first
+    use of the prep the entry reads from ``ctx``)."""
+    build, act = ENTRIES[name]
+    samples = []
+    for i in range(runs + 1):
+        t0 = time.time()
+        act(build(ctx))
+        if i:
+            samples.append(time.time() - t0)
+    ctx.release()
+    return sorted(samples)
+
+
+def run_entries(spark):
+    """``(timings, noise)``: every entry's median wall and its within-run
+    spread as % of the median, in registry order."""
+    ctx = BenchContext(spark)
+    timings: dict[str, float] = {}
+    noise: dict[str, float] = {}
+    try:
+        for name in ENTRIES:
+            samples = time_entry(ctx, name)
+            med = samples[len(samples) // 2]
+            timings[name] = round(med, 3)
+            # the measured noise floor a cross-round delta must clear before
+            # it can be read as a real regression (NOISE_FLOOR.md records
+            # the between-run floor from back-to-back same-code runs)
+            noise[name] = round(100.0 * (samples[-1] - samples[0]) / med, 1)
+    finally:
+        ctx.close()
     return timings, noise
+
+
+def start_session():
+    return get_spark("condenser-bench", master=f"local[{CPUS}]",
+                     shuffle_partitions=int(CPUS))
 
 
 # Host-drift calibration (VERDICT r17 "Next round" #9): two mid-cost,
@@ -1064,18 +1023,14 @@ def calibration_stamp(timings: dict[str, float]) -> dict:
 
 
 def main() -> int:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from condenser_spark.session import get_spark
-
     # machine-load self-labeling (VERDICT r8 "What's wrong #3") + the r11
     # hot-box guard: wait (bounded, BEFORE the JVM spins up) for the box to
     # go idle, then record loadavg before/after so the reader can tell a
     # hot box from a code regression without a rerun.
     idle_wait_s = wait_for_idle()
-    spark = get_spark("condenser-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=int(CPUS))
+    spark = start_session()
     load_start = os.getloadavg()
-    timings, noise = bench_queries(spark, SF_DIR)
+    timings, noise = run_entries(spark)
     load_end = os.getloadavg()
     detail_line, final_line = emit_lines(
         timings, noise, load_start, load_end, idle_wait_s,

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import sys
 
@@ -42,7 +43,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="phase-barrier mode; 'parquet' (default) writes each "
                         "table as it lands — the scale-safe barrier")
     p.add_argument("-v", "--verbose", action="store_true",
-                   help="per-phase wall times (reference -v parity)")
+                   help="log per-phase wall times to stderr (reference -v "
+                        "parity)")
     return p
 
 
@@ -68,6 +70,15 @@ def main(argv: list[str] | None = None,
 
     owns_session = spark is None
     spark = spark or get_spark("condenser-subset")
+    # -v shows the engine's INFO records only: the root logger stays as it
+    # is, since INFO elsewhere can cost jobs (functions.dedup counts the
+    # hot keys it drops when INFO is on)
+    engine_log = logging.getLogger("condenser_spark.engine")
+    level = engine_log.level
+    handler = logging.StreamHandler(sys.stderr) if args.verbose else None
+    if handler:
+        engine_log.addHandler(handler)
+        engine_log.setLevel(logging.INFO)
     try:
         teardown_dest(args.dest)  # S7: stale tables must not survive
         source = load_source_tables(spark, args.source,
@@ -76,7 +87,6 @@ def main(argv: list[str] | None = None,
             spark, cfg, source,
             dest_path=args.dest if args.materialize == "parquet" else None,
             materialize=args.materialize,
-            verbose=args.verbose,
         )
         eng.run()  # phases + hooks + RI validation (raises when not closed)
         if args.materialize != "parquet":
@@ -97,6 +107,9 @@ def main(argv: list[str] | None = None,
         eng.cleanup()
         return 0
     finally:
+        if handler:
+            engine_log.removeHandler(handler)
+            engine_log.setLevel(level)
         if owns_session:
             spark.stop()
 

@@ -39,8 +39,10 @@ Scale design (local[32] today, 1000 executors tomorrow):
 
 from __future__ import annotations
 
+import logging
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +67,8 @@ from condenser_spark.operators.projection import project_with_fk_nulls
 from condenser_spark.operators.validate import referential_violations, tabulate
 from condenser_spark.registry import empty_like
 
+logger = logging.getLogger(__name__)
+
 
 class SubsetEngine:
     """Run the middle-out subset over a dict of source DataFrames."""
@@ -76,7 +80,6 @@ class SubsetEngine:
         source: Mapping[str, DataFrame],
         dest_path: str | None = None,
         materialize: str = "none",
-        verbose: bool = False,
     ) -> None:
         if materialize not in ("none", "persist", "checkpoint", "parquet"):
             raise ValueError(f"unknown materialize mode: {materialize}")
@@ -98,17 +101,17 @@ class SubsetEngine:
             for r in config.fk_augmentation
             if r.fk_table in self.source and r.target_table in self.source
         ]
+        # the edges every phase walks: the working set's minus the
+        # user-broken ones
+        self.redacted: list[Relationship] = redact_relationships(
+            self.relationships, config.dependency_breaks
+        )
         self.dest: dict[str, DataFrame] = {}
         self.dest_path = dest_path
         self.materialize = materialize
-        self.verbose = verbose
         self._superseded: list[DataFrame] = []
 
     # ---------------------------------------------------------------- plumbing
-
-    def _log(self, msg: str) -> None:
-        if self.verbose:
-            print(msg)
 
     @staticmethod
     def _read_schema(schema):
@@ -179,23 +182,25 @@ class SubsetEngine:
                 self._read_schema(df.schema)).parquet(final)
         self.dest[table] = df
 
-    def _set_dest_group(self, items: list[tuple[str, DataFrame]]) -> None:
-        """Land a group of INDEPENDENT tables.  Parquet mode overlaps the
-        write jobs from a small thread pool (guide §2.6: actions are only
-        sequential because driver code calls them sequentially — FIFO
-        scheduling backfills one write's task tail with the next write's
-        tasks).  The lazy modes run the identical sequential loop — no
-        job executes inside ``_set_dest`` there, so overlap buys nothing
+    def _for_each(self, fn: Callable, items: list) -> None:
+        """``fn(item)`` for each of a group of INDEPENDENT items (tables
+        to land, or a downstream wave).  Parquet mode runs a write job per
+        item and overlaps them from a small thread pool (guide §2.6:
+        actions are only sequential because driver code calls them
+        sequentially — FIFO scheduling backfills one write's task tail
+        with the next write's tasks).  The lazy modes run the plain
+        sequential loop — no job executes there, so overlap buys nothing
         and single-threaded keeps their semantics trivially unchanged."""
         if self.materialize == "parquet" and len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(
                     max_workers=min(4, len(items))) as pool:
-                list(pool.map(lambda kv: self._set_dest(*kv), items))
+                list(pool.map(fn, items))
         else:
-            for t, df in items:
-                self._set_dest(t, df)
+            for item in items:
+                fn(item)
+
+    def _set_dest_group(self, items: list[tuple[str, DataFrame]]) -> None:
+        self._for_each(lambda kv: self._set_dest(*kv), items)
 
     def _downstream_waves(self, tables: list[str]) -> list[list[str]]:
         """Split the reverse-topological downstream order into waves of
@@ -205,14 +210,11 @@ class SubsetEngine:
         its own dest entry (touched by no other member), so members are
         independent and the J2 "dest as it stands mid-run" semantics are
         exactly the sequential order's."""
-        redacted = redact_relationships(
-            self.relationships, self.config.dependency_breaks
-        )
         waves: list[list[str]] = []
         wave: list[str] = []
         for t in tables:
             if any(r.target_table == t and r.fk_table in wave
-                   for r in redacted):
+                   for r in self.redacted):
                 waves.append(wave)
                 wave = []
             wave.append(t)
@@ -286,7 +288,8 @@ class SubsetEngine:
         for target in cfg.initial_targets:
             self._subset_direct(target)
             processed.add(target.table)
-        self._log(f"Direct target tables completed in {time.time() - t0:.2f}s")
+        logger.info("Direct target tables completed in %.2fs",
+                    time.time() - t0)
 
         # Phase 2 — greedy upstream (/root/reference/subset.py:58-67)
         t0 = time.time()
@@ -294,7 +297,7 @@ class SubsetEngine:
         for t in upstream_tables:
             if self._subset_upstream(t, processed):
                 processed.add(t)
-        self._log(f"Greedy subsettings completed in {time.time() - t0:.2f}s")
+        logger.info("Greedy subsettings completed in %.2fs", time.time() - t0)
 
         # Phase 3 — passthrough, before downstream so passthrough rows' FK needs
         # are satisfied (/root/reference/subset.py:69-78)
@@ -303,7 +306,7 @@ class SubsetEngine:
             (t, apply_limit(self.source[t], cfg.max_rows_per_table))
             for t in passthrough_tables
         ])
-        self._log(f"Pass-through completed in {time.time() - t0:.2f}s")
+        logger.info("Pass-through completed in %.2fs", time.time() - t0)
 
         # Phase 4 — downstream closure, reverse topo order, single pass
         # (/root/reference/subset.py:80-87)
@@ -312,20 +315,9 @@ class SubsetEngine:
             passthrough_tables, disconnected, order
         )
         for wave in self._downstream_waves(downstream_tables):
-            if self.materialize == "parquet" and len(wave) > 1:
-                # guide §2.6: FK-independent tables' fetch+append jobs
-                # overlap (parquet mode runs a write job per table; the
-                # lazy modes execute nothing here, so they keep the
-                # plain loop below)
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                        max_workers=min(4, len(wave))) as pool:
-                    list(pool.map(self._subset_downstream, wave))
-            else:
-                for t in wave:
-                    self._subset_downstream(t)
-        self._log(f"Downstream subsetting completed in {time.time() - t0:.2f}s")
+            self._for_each(self._subset_downstream, wave)
+        logger.info("Downstream subsetting completed in %.2fs",
+                    time.time() - t0)
 
         # Phase 5 — disconnected components (/root/reference/subset.py:89-97)
         t0 = time.time()
@@ -334,7 +326,8 @@ class SubsetEngine:
              else empty_like(self.source[t]))
             for t in disconnected
         ])
-        self._log(f"Disconnected tables completed in {time.time() - t0:.2f}s")
+        logger.info("Disconnected tables completed in %.2fs",
+                    time.time() - t0)
 
         # every table exists in the destination, possibly empty (schema replica);
         # excluded tables are present with zero rows (/root/reference/direct_subset.py:37)
@@ -417,12 +410,9 @@ class SubsetEngine:
         redacted edge whose parent is already processed, AND-combined, plus P4
         filters and the P5 cap.  Returns False when the table isn't referenced by
         anything processed (it stays empty) or was itself a direct target."""
-        redacted = redact_relationships(
-            self.relationships, self.config.dependency_breaks
-        )
         relevant = [
             r
-            for r in redacted
+            for r in self.redacted
             if r.target_table in processed and r.fk_table == table
         ]
         if not relevant or table in processed:
@@ -448,10 +438,7 @@ class SubsetEngine:
         """Phase-4 kernel (/root/reference/subset.py:166-204): union per-edge
         missing-key anti-joins (J2) -> na.drop (P6) -> distinct (J3) -> broadcast
         semi-join fetch from source (J4) -> P1 projection -> append."""
-        redacted = redact_relationships(
-            self.relationships, self.config.dependency_breaks
-        )
-        referencing = [r for r in redacted if r.target_table == table]
+        referencing = [r for r in self.redacted if r.target_table == table]
         if not referencing:
             return
 
@@ -495,10 +482,7 @@ class SubsetEngine:
 
     def validate(self) -> dict[Relationship, int]:
         """S8 analogue — orphan counts per non-broken edge; all zero == closed."""
-        redacted = redact_relationships(
-            self.relationships, self.config.dependency_breaks
-        )
-        return referential_violations(self.dest, redacted)
+        return referential_violations(self.dest, self.redacted)
 
     def report(self) -> DataFrame:
         """A3 — per-table subset-ratio tabulation

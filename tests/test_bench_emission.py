@@ -16,7 +16,6 @@ full-precision per-query values are never lost (they always live in
 from __future__ import annotations
 
 import json
-import re
 from pathlib import Path
 
 import bench
@@ -26,11 +25,16 @@ N_SYNTHETIC = 10
 
 
 def _current_bench_names() -> list[str]:
-    src = (Path(bench.__file__)).read_text()
-    names = re.findall(r'timed\(\s*"([^"]+)"', src)
-    assert len(names) >= 60, f"bench registry shrank unexpectedly: {names}"
-    assert len(names) == len(set(names)), "duplicate bench entry names"
-    return names
+    return list(bench.ENTRIES)
+
+
+def test_registry_names_match_the_committed_detail_record():
+    # no entry may be lost or renamed: the registry carries exactly the
+    # entries of the last full-core recording
+    repo = Path(bench.__file__).parent
+    detail = json.loads((repo / "BENCH_DETAIL_r18.json").read_text())
+    assert len(bench.ENTRIES) == 90
+    assert sorted(bench.ENTRIES) == sorted(detail["queries_full"])
 
 
 def _fake_run(names: list[str]):

@@ -196,3 +196,33 @@ def test_example_config_runs(spark, sf_dir, tmp_path, capsys):
     assert os.path.exists(os.path.join(dest, "orders.parquet"))
     out = capsys.readouterr().out
     assert "lineitem:" in out
+
+
+def test_cli_verbose_logs_phase_timings_to_stderr(spark, sf_dir, tmp_path,
+                                                  config_file, capsys):
+    """``-v`` logs the engine's five phase timings to stderr and leaves the
+    stdout tabulation byte-identical; only the engine logger is touched,
+    and only for the run."""
+    import logging
+
+    from condenser_spark.__main__ import main
+
+    root = logging.getLogger()
+    engine_log = logging.getLogger("condenser_spark.engine")
+    before = (root.level, list(root.handlers),
+              engine_log.level, list(engine_log.handlers))
+    runs = []
+    for i, extra in enumerate(([], ["-v"])):
+        rc = main([config_file, "--source", sf_dir,
+                   "--dest", str(tmp_path / f"dest{i}"), *extra], spark=spark)
+        assert rc == 0
+        runs.append(capsys.readouterr())
+    quiet, verbose = runs
+    assert verbose.out == quiet.out and "orders:" in quiet.out
+    assert "completed in" not in quiet.err
+    for phase in ("Direct target tables", "Greedy subsettings",
+                  "Pass-through", "Downstream subsetting",
+                  "Disconnected tables"):
+        assert f"{phase} completed in " in verbose.err, phase
+    assert (root.level, list(root.handlers),
+            engine_log.level, list(engine_log.handlers)) == before

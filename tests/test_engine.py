@@ -1,6 +1,8 @@
 """End-to-end middle-out subset tests + invariant checks (SURVEY §5.2.2-3),
 exercising the representative configs from FIXTURES.md."""
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -225,3 +227,83 @@ def test_run_full_lifecycle_with_hooks(spark, source):
     ))
     eng = SubsetEngine(spark, cfg, source)
     eng.run()  # validates closure internally, raises on violation
+
+
+# ------------------------------------------------------- self-referencing edge
+
+def _self_edge_source(spark):
+    emp = spark.createDataFrame(
+        [(1, None, 10), (2, 1, 10), (3, 1, 20), (4, 3, 20), (5, 9, 30)],
+        "id long, mgr long, dept long")
+    dept = spark.createDataFrame(
+        [(10, "a"), (20, "b"), (30, "c"), (40, "d")], "d_id long, name string")
+    return {"emp": emp, "dept": dept}
+
+
+def _self_edge_config(breaks):
+    return SubsetConfig.from_dict({
+        "initial_targets": [{"table": "emp", "where": "id IN (2, 4)"}],
+        "dependency_breaks": breaks,
+        "fk_augmentation": [
+            {"fk_table": "emp", "fk_columns": ["mgr"],
+             "target_table": "emp", "target_columns": ["id"]},
+            {"fk_table": "emp", "fk_columns": ["dept"],
+             "target_table": "dept", "target_columns": ["d_id"]},
+        ],
+    })
+
+
+@pytest.mark.parametrize("mode", ["none", "persist", "checkpoint", "parquet"])
+def test_broken_self_edge_runs_in_every_mode(spark, tmp_path, mode):
+    """A self-referencing FK edge listed in ``dependency_breaks`` goes
+    through the full lifecycle: its FK column is NULLed, the remaining edge
+    is closed, and the report runs."""
+    cfg = _self_edge_config([{"fk_table": "emp", "target_table": "emp"}])
+    eng = SubsetEngine(spark, cfg, _self_edge_source(spark), materialize=mode,
+                       dest_path=str(tmp_path / "dest"))
+    dest = eng.run()
+    assert sorted(tuple(r) for r in dest["emp"].collect()) == [
+        (2, None, 10), (4, None, 20)]
+    assert sorted(r.d_id for r in dest["dept"].collect()) == [10, 20]
+    assert all(n == 0 for n in eng.validate().values())
+    report = {r.table_name: (r.source_count, r.dest_count)
+              for r in eng.report().collect()}
+    assert report == {"emp": (5, 2), "dept": (4, 2)}
+    eng.cleanup()
+
+
+def test_unbroken_self_edge_is_a_circular_dependency(spark):
+    eng = SubsetEngine(spark, _self_edge_config([]), _self_edge_source(spark))
+    with pytest.raises(ValueError, match="Circular dependency"):
+        eng.run()
+
+
+def test_engine_redacts_the_edges_once(spark, source, monkeypatch):
+    import condenser_spark.engine as engine_mod
+
+    calls = []
+    real = engine_mod.redact_relationships
+    monkeypatch.setattr(engine_mod, "redact_relationships",
+                        lambda *a: calls.append(a) or real(*a))
+    eng = run(
+        spark, source,
+        initial_targets=[{"table": "orders", "percent": 10,
+                          "sample_key": "o_orderkey"}],
+        passthrough_tables=["region"],
+    )
+    assert_closed(eng)
+    assert len(calls) == 1
+
+
+def test_phase_timings_are_logged(spark, source, caplog):
+    caplog.set_level(logging.INFO, logger="condenser_spark.engine")
+    run(
+        spark, source,
+        initial_targets=[{"table": "orders", "percent": 10,
+                          "sample_key": "o_orderkey"}],
+    )
+    phases = [r.getMessage().split(" completed in ")[0]
+              for r in caplog.records if r.name == "condenser_spark.engine"]
+    assert phases == ["Direct target tables", "Greedy subsettings",
+                      "Pass-through", "Downstream subsetting",
+                      "Disconnected tables"]
