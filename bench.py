@@ -27,8 +27,8 @@ The entries live in one ordered registry, ``ENTRIES``: name ->
 callable, for composite entries) and ``act`` is the action run on it.  The
 ``BenchContext`` passed as ``ctx`` builds the shared inputs, models and
 fixtures on first use, in the untimed warm-up run.  The bench walks the
-registry in order; ``scripts/profile.py`` times named entries in isolation
-and captures their plans from the same definitions.
+registry in order; ``scripts/bench_profile.py`` times named entries in
+isolation and captures their plans from the same definitions.
 """
 
 from __future__ import annotations

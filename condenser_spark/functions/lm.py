@@ -1146,15 +1146,19 @@ def train_kn_trigram_lm(
         F.lag("w", 1).over(w).alias("w2"),
         F.col("w").alias("w3"),
     ).filter(F.col("w1").isNotNull())
+    # the levels below and the model sides share c3, contb, p1_side and
+    # bigram_full; each is checkpointed once, so the sides' barriers (which
+    # run their shuffle stages when built under AQE) read them instead of
+    # each re-running the tokenize -> window -> count chain
     c3 = triples.groupBy("w1", "w2", "w3").agg(
-        F.count(F.lit(1)).alias("c3"))
+        F.count(F.lit(1)).alias("c3")).localCheckpoint(eager=False)
     # c3 rows are distinct (w1,w2,w3), so COUNT(*) groups below ARE the
     # N1+ continuation-type counts — no countDistinct needed anywhere
     ctx12 = c3.groupBy("w1", "w2").agg(
         F.sum("c3").alias("c12"),            # c(w1 w2 .)
         F.count(F.lit(1)).alias("n1p12"))    # N1+(w1 w2 *)
-    contb = c3.groupBy("w2", "w3").agg(
-        F.count(F.lit(1)).alias("n1pb"))     # N1+(* w2 w3)
+    contb = c3.groupBy("w2", "w3").agg(       # N1+(* w2 w3)
+        F.count(F.lit(1)).alias("n1pb")).localCheckpoint(eager=False)
     ctx2 = contb.groupBy("w2").agg(
         F.sum("n1pb").alias("n1pb_ctx"),     # N1+(* w2 *)
         F.count(F.lit(1)).alias("n1p_types"))  # N1+(w2 *)
@@ -1176,7 +1180,7 @@ def train_kn_trigram_lm(
         .crossJoin(F.broadcast(npp))
         .crossJoin(F.broadcast(totals))
         .select("term", p1_expr.alias("p1"))
-    )
+    ).localCheckpoint(eager=False)
     unigram = (
         p1_side
         .join(ctx2.withColumnRenamed("w2", "term"), on="term", how="left")
@@ -1198,7 +1202,7 @@ def train_kn_trigram_lm(
         contb.join(ctx2, on="w2")
         .join(p1_side.withColumnRenamed("term", "w3"), on="w3")
         .select("w2", "w3", p2_expr.alias("p2"))
-    )
+    ).localCheckpoint(eager=False)
     bigram = bigram_full.select(
         "w2", "w3",
         F.round(F.log(F.col("p2")) * F.lit(10_000.0))
@@ -1309,25 +1313,27 @@ def train_kn5_lm(
         F.lag("w", 1).over(w).alias("w4"),
         F.col("w").alias("w5"),
     ).filter(F.col("w1").isNotNull())
+    # the trigram trainer's shared-table checkpoints, one per count level
+    # and per nested *_full side
     c5 = quints.groupBy("w1", "w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("c5"))
+        F.count(F.lit(1)).alias("c5")).localCheckpoint(eager=False)
     # c5 rows are distinct 5-tuples, so COUNT(*) groups below ARE the
     # N1+ continuation-type counts all the way down (no countDistinct)
     ctx1234 = c5.groupBy("w1", "w2", "w3", "w4").agg(
         F.sum("c5").alias("c1234"),          # c(w1..w4 .)
         F.count(F.lit(1)).alias("n1p1234"))  # N1+(w1..w4 *)
-    cont4 = c5.groupBy("w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("n4"))       # N1+(* w2..w5)
+    cont4 = c5.groupBy("w2", "w3", "w4", "w5").agg(  # N1+(* w2..w5)
+        F.count(F.lit(1)).alias("n4")).localCheckpoint(eager=False)
     ctx234 = cont4.groupBy("w2", "w3", "w4").agg(
         F.sum("n4").alias("t234"),           # N1+(* w2w3w4 *)
         F.count(F.lit(1)).alias("y234"))     # N1+(w2w3w4 *) types
-    cont3 = cont4.groupBy("w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("n3"))       # N1+(* w3w4w5)
+    cont3 = cont4.groupBy("w3", "w4", "w5").agg(  # N1+(* w3w4w5)
+        F.count(F.lit(1)).alias("n3")).localCheckpoint(eager=False)
     ctx34 = cont3.groupBy("w3", "w4").agg(
         F.sum("n3").alias("t34"),
         F.count(F.lit(1)).alias("y34"))
-    cont2 = cont3.groupBy("w4", "w5").agg(
-        F.count(F.lit(1)).alias("n2"))       # N1+(* w4w5)
+    cont2 = cont3.groupBy("w4", "w5").agg(    # N1+(* w4w5)
+        F.count(F.lit(1)).alias("n2")).localCheckpoint(eager=False)
     ctx4u = cont2.groupBy("w4").agg(
         F.sum("n2").alias("t4"),
         F.count(F.lit(1)).alias("y4"))
@@ -1347,7 +1353,7 @@ def train_kn5_lm(
         .crossJoin(F.broadcast(npp))
         .crossJoin(F.broadcast(totals))
         .select("term", p1_expr.alias("p1"))
-    )
+    ).localCheckpoint(eager=False)
     g2_expr = d * F.col("y4") / F.col("t4")
     unigram = (
         p1_side
@@ -1368,7 +1374,7 @@ def train_kn5_lm(
         cont2.join(ctx4u, on="w4")
         .join(p1_side.withColumnRenamed("term", "w5"), on="w5")
         .select("w4", "w5", p2_expr.alias("p2"))
-    )
+    ).localCheckpoint(eager=False)
     bigram = bigram_full.select(
         "w4", "w5",
         F.round(F.log(F.col("p2")) * F.lit(10_000.0))
@@ -1387,7 +1393,7 @@ def train_kn5_lm(
         cont3.join(ctx34, on=["w3", "w4"])
         .join(bigram_full, on=["w4", "w5"])
         .select("w3", "w4", "w5", p3_expr.alias("p3"))
-    )
+    ).localCheckpoint(eager=False)
     trigram = trigram_full.select(
         "w3", "w4", "w5",
         F.round(F.log(F.col("p3")) * F.lit(10_000.0))
@@ -1407,7 +1413,7 @@ def train_kn5_lm(
         cont4.join(ctx234, on=["w2", "w3", "w4"])
         .join(trigram_full, on=["w3", "w4", "w5"])
         .select("w2", "w3", "w4", "w5", p4_expr.alias("p4"))
-    )
+    ).localCheckpoint(eager=False)
     fourgram = fourgram_full.select(
         "w2", "w3", "w4", "w5",
         F.round(F.log(F.col("p4")) * F.lit(10_000.0))

@@ -1,6 +1,6 @@
 """Time bench entries in isolation and capture their plans.
 
-    SPARK_GRAFT_SF_DIR=<sf dir> python scripts/profile.py NAME... \
+    SPARK_GRAFT_SF_DIR=<sf dir> python scripts/bench_profile.py NAME... \
         [--runs N] [--plans-dir D --suffix S]
 
 Each NAME is an entry of ``bench.ENTRIES``.  The session is the bench's
@@ -21,10 +21,7 @@ import os
 import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# this script's directory would shadow the stdlib ``profile`` module (cProfile
-# imports it), so the repo root takes its place on the path
-sys.path[0] = REPO
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
@@ -42,7 +39,7 @@ def formatted_plan(df: DataFrame) -> str:
 
 
 def main(argv: list[str] | None = None) -> int:
-    p = argparse.ArgumentParser(prog="scripts/profile.py",
+    p = argparse.ArgumentParser(prog="scripts/bench_profile.py",
                                 description=__doc__.split("\n")[0])
     p.add_argument("names", nargs="+", metavar="NAME")
     p.add_argument("--runs", type=int, default=3,

@@ -3,7 +3,7 @@
 Every entry's ``build`` runs against the sf0.001 fixtures, shared prep
 included, and each DataFrame it returns is planned; no entry's timed
 action runs.  A library change that breaks a bench entry fails here
-instead of at the next bench recording.  ``scripts/profile.py``, which
+instead of at the next bench recording.  ``scripts/bench_profile.py``, which
 reads the same registry, is driven once end to end.
 """
 
@@ -45,7 +45,7 @@ def test_every_entry_builds_and_plans(spark, sf_dir):
 def test_profile_script_times_an_entry_and_writes_its_plan(sf_dir, tmp_path):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "profile.py"), "exact_dedup",
+        [sys.executable, str(REPO / "scripts" / "bench_profile.py"), "exact_dedup",
          "--runs", "1", "--plans-dir", str(tmp_path), "--suffix", "_x"],
         capture_output=True, text=True, env=env, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -54,3 +54,12 @@ def test_profile_script_times_an_entry_and_writes_its_plan(sf_dir, tmp_path):
     assert "exchanges=" in line and "python_nodes=" in line, line
     plan = (tmp_path / "exact_dedup_x.txt").read_text()
     assert "== Physical Plan ==" in plan
+
+
+def test_no_script_shadows_a_stdlib_module():
+    """``python scripts/X.py`` puts ``scripts/`` first on ``sys.path``, so a
+    script named like a stdlib module replaces that module for every script
+    there: one named ``profile`` broke pyspark's import (through
+    ``cProfile``) in ``check_oracles.py`` and ``stress_smoke.py``."""
+    stems = {p.stem for p in (REPO / "scripts").glob("*.py")}
+    assert not stems & sys.stdlib_module_names
