@@ -17,13 +17,20 @@ last (DSIR §3: weights are computed on the cleaned distribution).
 Eleven per-document stages have ONE body each, shared with
 :func:`condenser_spark.streaming.curate.curate_stream`: domain_prior, html,
 normalize, badwords, c4, diversity, script, gopher, fineweb, code and pii
-(``_<stage>_stage`` below), each a join-free projection/filter.  The rest
-keep two forms because the batch algorithm differs: media/video, URL, line
-and substring dedup work over the whole corpus here (pairs, the
-``url_dedup`` aggregate, a self-join) and probe a landed index on a stream;
-the langid, quality and perplexity scorers explode and aggregate here and
-use per-row twins there; gopher_repetition defaults to the 7-rule SQL
-table here and to the 12-rule kernel there, which give different results.
+(``_<stage>_stage`` below), each a join-free projection/filter; the
+diversity and fineweb operators themselves are single per-row bodies in
+``functions/text.py``.  The rest keep two forms because the batch
+algorithm differs: media/video, URL, line and substring dedup work over the
+whole corpus here (pairs, the ``url_dedup`` aggregate, a self-join) and
+probe a landed index on a stream; the langid, quality and unigram LM
+scorers explode and aggregate here and use per-row twins there (per-row
+langid measured 3.2x the batch wall at 1M docs, STRESS stage 21); the
+bigram and Kneser-Ney LM scorers share one scoring chain
+(``functions.lm._score_chain``) that reads previous tokens with a ``lag``
+window and folds per document with ``groupBy`` here, and with per-row
+``element_at`` and a micro-batch fold there; gopher_repetition defaults
+to the 7-rule SQL table here and to the 12-rule kernel there, which give
+different results.
 """
 
 from __future__ import annotations
@@ -223,11 +230,11 @@ def _c4_stage(cur, opts, *, text_col, id_col):
 
 
 def _diversity_stage(cur, opts, *, text_col, id_col):
-    # per-doc distinct-n ratios (Li et al. 2016) from the stateless kernel,
+    # per-doc distinct-n ratios (Li et al. 2016) from the per-row kernel,
     # thresholded; there is no published universal threshold, so the
     # caller picks.  A doc too short to HAVE an n-gram of length n (ratio
     # NULL) passes: no repetition evidence.
-    from condenser_spark.streaming.textdedup import diversity_stats_stateless
+    from condenser_spark.functions.text import diversity_stats
 
     opts = dict(opts)
     thresholds = {
@@ -239,9 +246,8 @@ def _diversity_stage(cur, opts, *, text_col, id_col):
             "diversity= takes min_ratio_1/min_ratio_2/min_ratio_3 "
             f"(at least one); got unknown/empty: {sorted(opts) or '{}'}")
     hid, names = _hidden(cur, id_col)
-    stats = diversity_stats_stateless(hid, text_col=names[text_col],
-                                      id_col=id_col,
-                                      keep_cols=tuple(names.values()))
+    stats = diversity_stats(hid, text_col=names[text_col], id_col=id_col,
+                            keep_cols=tuple(names.values()))
     cond = F.lit(True)
     for n, t in sorted(thresholds.items()):
         r = F.col(f"ratio_{n}")
@@ -282,12 +288,12 @@ def _gopher_stage(cur, opts, *, text_col, id_col):
 
 
 def _fineweb_stage(cur, opts, *, text_col, id_col):
-    # one Arrow kernel per row, equal row for row to the per-line groupBy
-    # of functions.text.fineweb_quality_flags
-    from condenser_spark.streaming.textdedup import fineweb_quality_stateless
+    # one per-row projection: the FineWeb line statistics as JVM
+    # higher-order functions over the bound line array
+    from condenser_spark.functions.text import fineweb_quality_flags
 
     hid, names = _hidden(cur, id_col)
-    flagged = fineweb_quality_stateless(
+    flagged = fineweb_quality_flags(
         hid, text_col=names[text_col], id_col=id_col,
         keep_cols=tuple(names.values()), **_stage_opts(opts))
     return flagged.filter(F.col("fineweb_pass")).select(
@@ -446,10 +452,10 @@ def curate_corpus(
        distinct-n repetition): a dict of ``min_ratio_1/2/3`` (any
        subset, at least one) thresholding the per-document Li et al.
        2016 distinct-n ratios; short docs whose ratio is NULL pass
-       (no repetition evidence).  Runs via the join-free stateless
-       kernel (:func:`streaming.textdedup.diversity_stats_stateless`,
-       batch-legal, oracle-pinned); the stats columns are dropped so
-       the schema is preserved.  There is no published universal
+       (no repetition evidence).  Runs via the join-free per-row
+       kernel (:func:`functions.text.diversity_stats`, stream-legal,
+       oracle-pinned); the stats columns are dropped so the schema is
+       preserved.  There is no published universal
        threshold — the caller picks per corpus.
     1c. ``script`` — the mixed-script spam gate (CCNet's pre-langid
        slot; :func:`functions.langid.script_stats`): a dict of

@@ -465,66 +465,18 @@ def bigram_score_documents(
     aggregate the integers, derive floats at the edge).  Empty docs report
     (0, 0) and the OOV unigram floor.
 
-    Scale shape: tokenize -> ONE broadcast join against the
-    (vocab+1)-row unigram side (mapping, first-token scores, and backoffs
-    in a single pass) -> one id-partitioned lag window (the shingling
+    Scale shape: the shared scoring chain :func:`_score_chain` at order
+    2.  Tokenize -> ONE broadcast join against the (vocab+1)-row unigram
+    side (mapping, first-token scores, and backoffs in a single pass) ->
+    the previous token from one id-partitioned lag window (the shingling
     shuffle) -> left join the bigram side on (w1, w2) — the only
     potentially large join, shuffled on the pair key, AQE-broadcast when
-    small -> map-side-combined integer sum per doc -> join scores back."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("bigram_score_documents: unigram frame has no OOV "
-                         "row — build the model with train_bigram_lm")
-    oov_logp4, oov_backoff4 = int(oov_row.logp4), int(oov_row.backoff4)
-
-    from pyspark.sql import Window
-
-    # ladder keys as xxhash64 longs (r18, guide §2.3) — see
-    # kn5_score_documents; collision-checked, string fallback
-    hashed = _gram_hash_injective(unigram)
-    term_key = F.xxhash64(F.col("term")) if hashed else F.col("term")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    bigram_side = (_hashed_gram_side(bigram, ("w1", "w2")) if hashed
-                   else bigram)
-    seq = (
-        _pos_tokens(df, text_col, id_col)
-        .join(F.broadcast(unigram.filter(F.col("term") != OOV_TERM)),
-              on="term", how="left")
-        .select(
-            "_id", "_pos",
-            F.when(F.col("logp4").isNotNull(), term_key)
-            .otherwise(oov_key).alias("w2"),
-            F.coalesce(F.col("logp4"), F.lit(oov_logp4)).alias("_lp4"),
-            F.coalesce(F.col("backoff4"), F.lit(oov_backoff4))
-            .alias("_bo4"),
-        )
-    )
-    w = Window.partitionBy("_id").orderBy("_pos")
-    chained = seq.select(
-        "_id", "w2", "_lp4", "_bo4",
-        F.lag("w2", 1).over(w).alias("w1"),
-    )
-    contrib = F.when(F.col("w1").isNull(), F.col("_lp4")).otherwise(
-        F.coalesce(F.col("logp4"), F.col("_bo4")))
-    per = (
-        chained.join(bigram_side, on=["w1", "w2"], how="left")
-        .groupBy("_id")
-        .agg(F.sum(contrib).alias("_s4"), F.count(F.lit(1)).alias("_n"))
-        .withColumnRenamed("_id", id_col)
-    )
-    floor = round(oov_logp4 / 10_000.0, 4)
-    return df.join(per, on=id_col, how="left").select(
-        *df.columns,
-        F.coalesce(
-            F.round(F.col("_s4") / F.lit(10_000.0) / F.col("_n"), 4),
-            F.lit(floor),
-        ).alias("lm2_logprob"),
-        F.coalesce(F.col("_s4"), F.lit(0)).cast("long")
-        .alias("lm2_logprob4_sum"),
-        F.coalesce(F.col("_n"), F.lit(0)).cast("long")
-        .alias("n_scored_tokens"),
-    )
+    small -> map-side-combined integer sum per doc -> join scores back.
+    The window and the groupBy/join-back are where this form differs
+    from :func:`bigram_score_documents_stream`."""
+    return _score_chain(df, (unigram, bigram), "bigram",
+                        "bigram_score_documents", stream=False,
+                        text_col=text_col, id_col=id_col)
 
 
 def _gram_hash_injective(unigram: DataFrame) -> bool:
@@ -596,10 +548,8 @@ def _guard_reserved(df: DataFrame, reserved, fn_name: str) -> None:
 #: fold); kept as one superset so the guard stays simple
 _STREAM_RESERVED = (
     "_raw", "_pos", "_cur", "_prev1", "_prev2", "_prev3", "_prev4",
-    "_skip", "w1", "w2", "w3", "w4", "w5",
-    "_lp1", "_lp4", "_bo4", "_g2_prev", "_c4", "_tok",
-    "_ulp4", "_ubo4", "_pinv", "_u3lp1", "_u2inv", "_u2g2", "_u1inv",
-    "_uclp1", "_p1inv", "_p1g2", "_p2inv", "_p3inv", "_p4inv",
+    "_skip", "w1", "w2", "w3", "w4", "w5", "_lp", "_bo4", "_c4", "_tok",
+    "_ulp", "_ubo", "_pbo", "_p1inv", "_p2inv", "_p3inv", "_p4inv",
     "logp4", "logp2_4", "logp3_4", "logp4_4", "logp5_4",
     "logg12_4", "logg3_4", "logg4_4", "logg5_4",
 )
@@ -758,6 +708,181 @@ def _doc_sum_stream(rows: DataFrame, df: DataFrame, id_col: str,
         final_gen, schema=out_schema)
 
 
+def _score_chain(df: DataFrame, model: tuple, kind: str, fn_name: str, *,
+                 stream: bool, text_col: str, id_col: str) -> DataFrame:
+    """The one scoring chain behind the six n-gram scorers: the
+    interpolated bigram (``kind="bigram"``), and the Kneser-Ney ladder at
+    order 3 (``"kn_trigram"``) or 5 (``"kn_5gram"``).  ``model`` is the
+    trainer's tuple; :data:`LM_KINDS` names each side's key and value
+    columns.
+
+    Every token maps through the (vocab+1)-row unigram side to its OOV-
+    substituted key ``w{n}`` (xxhash64 longs when the model's terms hash
+    injectively, :func:`_gram_hash_injective`), its first-rung score
+    ``_lp`` and the bigram rung's back-off ``_bo4``; the previous
+    ``n - 1`` keys ride the same row as ``w1 .. w{n-1}``.  Then the gram
+    sides left-join in ladder order — bigram, then per order k the
+    context (gamma) side and the k-gram side — and each token adds:
+
+        score1  = _lp
+        score2  = coalesce(logp4, _bo4)                   bigram model
+                  coalesce(logp2_4, _bo4 + _lp, _lp)      Kneser-Ney
+        score_k = coalesce(logp{k}_4, gamma_k + score_{k-1}, score_{k-1})
+
+    at the highest order its preceding tokens allow.  The bigram rung is
+    the only model-specific expression: the bigram model backs off to
+    the CURRENT token's ``backoff4``, Kneser-Ney to the PREVIOUS token's
+    gamma ``logg2_4`` plus the current continuation unigram.
+
+    The batch and stream forms differ in two places only:
+
+    * previous tokens — batch maps tokens in one broadcast join and
+      reads the previous keys with a ``lag`` window over (id, pos);
+      stream reads them per row with :func:`_stream_chain_rows`'
+      ``element_at`` and maps each through its own broadcast join (a
+      window is illegal on a stream).  A window-free batch form gave the
+      same rows but ran slower at sf0.1 (2.75-3.51 s against 2.25-2.63
+      s for KN-5), so batch keeps the window;
+    * the per-document fold — batch: ``groupBy`` plus a left join back
+      onto ``df``; stream: the micro-batch-local :func:`_doc_sum_stream`.
+    """
+    spec = LM_KINDS[kind]
+    unigram, bigram, *higher = model
+    # the unigram side's value columns: first-rung score, bigram back-off
+    lp_col, bo_col = spec[0][1][1:]
+    # rungs above the bigram, lowest first:
+    # (context side, its columns, k-gram side, its columns)
+    ladder = [(higher[i + 1], spec[i + 3][1], higher[i], spec[i + 2][1])
+              for i in range(0, len(higher), 2)]
+    n = len(ladder) + 2
+    w = [f"w{i}" for i in range(1, n + 1)]  # w[-1] is the current token
+
+    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
+    if oov_row is None:
+        trainer = {"bigram": "train_bigram_lm",
+                   "kn_trigram": "train_kn_trigram_lm",
+                   "kn_5gram": "train_kn5_lm"}[kind]
+        raise ValueError(f"{fn_name}: unigram frame has no OOV row — "
+                         f"build the model with {trainer}")
+    oov_lp4 = int(oov_row[lp_col])
+    oov_lp = F.lit(oov_lp4)
+    # a Kneser-Ney OOV gamma may be None: OOV never observed as context
+    oov_bo = F.lit(oov_row[bo_col]).cast("long")
+
+    # ladder keys as xxhash64 longs (r18, guide §2.3): every gram join and
+    # the lag window shuffle fixed-width keys; collision-checked per model,
+    # string fallback
+    hashed = _gram_hash_injective(unigram)
+    key = F.xxhash64 if hashed else (lambda c: c)
+    oov_key = key(F.lit(OOV_TERM))
+    side = _hashed_gram_side if hashed else (lambda t, keys: t)
+    uni = unigram.filter(F.col("term") != OOV_TERM)
+    kn = kind != "bigram"
+
+    if not stream:
+        from pyspark.sql import Window
+
+        inv = F.col(lp_col).isNotNull()
+        seq = (
+            _pos_tokens(df, text_col, id_col)
+            .join(F.broadcast(uni), on="term", how="left")
+            .select(
+                "_id", "_pos",
+                F.when(inv, key(F.col("term"))).otherwise(oov_key)
+                .alias(w[-1]),
+                F.coalesce(F.col(lp_col), oov_lp).alias("_lp"),
+                F.when(inv, F.col(bo_col)).otherwise(oov_bo).alias("_bo4"),
+            )
+        )
+        win = Window.partitionBy("_id").orderBy("_pos")
+        rows = seq.select(
+            "_id", w[-1], "_lp",
+            *[F.lag(w[-1], k).over(win).alias(w[-1 - k])
+              for k in range(1, n)],
+            F.lag("_bo4", 1).over(win).alias("_bo4") if kn else "_bo4",
+        )
+    else:
+        _guard_reserved(df, _STREAM_RESERVED, fn_name)
+        rows = _stream_chain_rows(df, text_col, depth=n - 1).join(
+            F.broadcast(uni.select(
+                F.col("term").alias("_cur"), F.col(lp_col).alias("_ulp"),
+                *([] if kn else [F.col(bo_col).alias("_ubo")]))),
+            on="_cur", how="left")
+        for k in range(1, n):
+            rows = rows.join(
+                F.broadcast(uni.select(
+                    F.col("term").alias(f"_prev{k}"),
+                    F.lit(True).alias(f"_p{k}inv"),
+                    *([F.col(bo_col).alias("_pbo")]
+                      if kn and k == 1 else []))),
+                on=f"_prev{k}", how="left")
+
+        def prev(k: int, value, oov):
+            return (F.when(F.col(f"_prev{k}").isNull(), F.lit(None))
+                    .when(F.col(f"_p{k}inv"), value).otherwise(oov))
+
+        cur_inv = F.col("_ulp").isNotNull()
+        rows = rows.select(
+            *_thin_carry(df, id_col),
+            (F.col("_cur").isNull() | (F.col("_cur") == "")).alias("_skip"),
+            F.when(cur_inv, key(F.col("_cur"))).otherwise(oov_key)
+            .alias(w[-1]),
+            *[prev(k, key(F.col(f"_prev{k}")), oov_key).alias(w[-1 - k])
+              for k in range(1, n)],
+            F.coalesce(F.col("_ulp"), oov_lp).alias("_lp"),
+            (prev(1, F.col("_pbo"), oov_bo) if kn
+             else F.when(cur_inv, F.col("_ubo")).otherwise(oov_bo))
+            .alias("_bo4"),
+        )
+
+    def join_side(r, t, cols):
+        keys = list(cols[:-1])
+        return r.join(side(t, keys), on=keys, how="left")
+
+    rows = join_side(rows, bigram, spec[1][1])
+    for ctx, ctx_cols, gram, gram_cols in ladder:
+        rows = join_side(join_side(rows, ctx, ctx_cols), gram, gram_cols)
+
+    lp = F.col("_lp")
+    score = (F.coalesce(F.col(spec[1][1][-1]), F.col("_bo4") + lp, lp) if kn
+             else F.coalesce(F.col(spec[1][1][-1]), F.col("_bo4")))
+    first = F.col(w[-2]).isNull()
+    contrib = (F.when(F.col("_skip"), F.lit(0)).when(first, lp) if stream
+               else F.when(first, lp))
+    for k, (_, ctx_cols, _, gram_cols) in enumerate(ladder, start=3):
+        contrib = contrib.when(F.col(w[-k]).isNull(), score)
+        score = F.coalesce(F.col(gram_cols[-1]),
+                           F.col(ctx_cols[-1]) + score, score)
+    contrib = contrib.otherwise(score)
+
+    prefix = f"lm{n}"
+    floor = round(oov_lp4 / 10_000.0, 4)
+    if stream:
+        prepared = rows.select(
+            *df.columns,
+            contrib.cast("long").alias("_c4"),
+            F.when(F.col("_skip"), F.lit(0)).otherwise(F.lit(1))
+            .cast("long").alias("_tok"),
+        )
+        return _doc_sum_stream(prepared, df, id_col, prefix, floor)
+    per = (
+        rows.groupBy("_id")
+        .agg(F.sum(contrib).alias("_s4"), F.count(F.lit(1)).alias("_n"))
+        .withColumnRenamed("_id", id_col)
+    )
+    return df.join(per, on=id_col, how="left").select(
+        *df.columns,
+        F.coalesce(
+            F.round(F.col("_s4") / F.lit(10_000.0) / F.col("_n"), 4),
+            F.lit(floor),
+        ).alias(f"{prefix}_logprob"),
+        F.coalesce(F.col("_s4"), F.lit(0)).cast("long")
+        .alias(f"{prefix}_logprob4_sum"),
+        F.coalesce(F.col("_n"), F.lit(0)).cast("long")
+        .alias("n_scored_tokens"),
+    )
+
+
 def bigram_score_documents_stream(
     df: DataFrame,
     unigram: DataFrame,
@@ -767,69 +892,18 @@ def bigram_score_documents_stream(
 ) -> DataFrame:
     """:func:`bigram_score_documents` as a streaming-legal plan — same
     three output columns, scores BIT-IDENTICAL to batch (parity-pinned).
-    The lag window becomes per-row element_at reads; the (vocab+1)-row
-    unigram side broadcast-joins twice (current + previous token); the
-    unbounded bigram side stays a stream-static shuffle equi-join (never
-    collected — the reason the stateless-kernel route is closed to
-    n-gram models); the per-doc aggregate is the micro-batch-local
-    :func:`_doc_sum_stream` fold.  Works identically on a plain batch
-    frame (the stream-twin convention)."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("bigram_score_documents_stream: unigram frame "
-                         "has no OOV row — build the model with "
-                         "train_bigram_lm")
-    oov_lp4, oov_bo4 = int(oov_row.logp4), int(oov_row.backoff4)
-
-    _guard_reserved(df, _STREAM_RESERVED, "bigram_score_documents_stream")
-    # ladder keys as xxhash64 longs (r18, guide §2.3) — see
-    # kn5_score_documents; collision-checked, string fallback
-    hashed = _gram_hash_injective(unigram)
-    key = (lambda c: F.xxhash64(c)) if hashed else (lambda c: c)
-    null_key = F.lit(None).cast("long" if hashed else "string")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    bigram_side = (_hashed_gram_side(bigram, ("w1", "w2")) if hashed
-                   else bigram)
-    uni = unigram.filter(F.col("term") != OOV_TERM)
-    u_cur = F.broadcast(uni.select(
-        F.col("term").alias("_cur"),
-        F.col("logp4").alias("_ulp4"),
-        F.col("backoff4").alias("_ubo4")))
-    u_prev = F.broadcast(uni.select(
-        F.col("term").alias("_prev1"),
-        F.lit(True).alias("_pinv")))
-    rows = (
-        _stream_chain_rows(df, text_col, depth=1)
-        .join(u_cur, on="_cur", how="left")
-        .join(u_prev, on="_prev1", how="left")
-    )
-    skip = F.col("_cur").isNull() | (F.col("_cur") == "")
-    scored_rows = rows.select(
-        *_thin_carry(df, id_col),
-        skip.alias("_skip"),
-        F.when(F.col("_ulp4").isNotNull(), key(F.col("_cur")))
-        .otherwise(oov_key).alias("w2"),
-        F.when(F.col("_prev1").isNull(), null_key)
-        .when(F.col("_pinv"), key(F.col("_prev1")))
-        .otherwise(oov_key).alias("w1"),
-        F.coalesce(F.col("_ulp4"), F.lit(oov_lp4)).alias("_lp4"),
-        F.coalesce(F.col("_ubo4"), F.lit(oov_bo4)).alias("_bo4"),
-    )
-    joined = scored_rows.join(bigram_side, on=["w1", "w2"], how="left")
-    contrib = (
-        F.when(F.col("_skip"), F.lit(0))
-        .when(F.col("w1").isNull(), F.col("_lp4"))
-        .otherwise(F.coalesce(F.col("logp4"), F.col("_bo4")))
-    )
-    prepared = joined.select(
-        *df.columns,
-        contrib.cast("long").alias("_c4"),
-        F.when(F.col("_skip"), F.lit(0)).otherwise(F.lit(1))
-        .cast("long").alias("_tok"),
-    )
-    return _doc_sum_stream(prepared, df, id_col, "lm2",
-                           round(oov_lp4 / 10_000.0, 4))
+    Scale shape: the shared scoring chain :func:`_score_chain` at order
+    2, differing from batch in two places: the lag window becomes
+    per-row element_at reads, so the (vocab+1)-row unigram side
+    broadcast-joins twice (current + previous token), and the per-doc
+    aggregate is the micro-batch-local :func:`_doc_sum_stream` fold.
+    The unbounded bigram side stays a stream-static shuffle equi-join
+    (never collected — the reason the stateless-kernel route is closed
+    to n-gram models).  Works identically on a plain batch frame (the
+    stream-twin convention)."""
+    return _score_chain(df, (unigram, bigram), "bigram",
+                        "bigram_score_documents_stream", stream=True,
+                        text_col=text_col, id_col=id_col)
 
 
 def kn_trigram_score_documents_stream(
@@ -843,98 +917,20 @@ def kn_trigram_score_documents_stream(
 ) -> DataFrame:
     """:func:`kn_trigram_score_documents` as a streaming-legal plan —
     same three output columns, scores BIT-IDENTICAL to batch
-    (parity-pinned).  Shape: per-row n-gram extraction (no window) ->
-    THREE broadcast joins against the (vocab+1)-row unigram side
-    (current/previous/previous-previous token: OOV mapping, unigram
-    scores, and the previous token's gamma in one pass each) -> three
-    stream-static left equi-joins against the unbounded observed-gram
-    sides (shuffled on their keys, exactly the batch scorer's joins —
-    the landed-model sides from :func:`load_lm` drop in directly) ->
-    the micro-batch-local :func:`_doc_sum_stream` fold.  No lag window,
-    no state store, no watermark: append-mode safe.  Works identically
-    on a plain batch frame (the stream-twin convention)."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("kn_trigram_score_documents_stream: unigram "
-                         "frame has no OOV row — build the model with "
-                         "train_kn_trigram_lm")
-    oov_lp1 = int(oov_row.logp1_4)
-    oov_g2 = oov_row.logg2_4  # may be None: OOV never observed as context
-
-    _guard_reserved(df, _STREAM_RESERVED, "kn_trigram_score_documents_stream")
-    # ladder keys as xxhash64 longs (r18, guide §2.3) — see
-    # kn5_score_documents; collision-checked, string fallback
-    hashed = _gram_hash_injective(unigram)
-    key = (lambda c: F.xxhash64(c)) if hashed else (lambda c: c)
-    null_key = F.lit(None).cast("long" if hashed else "string")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    side = ((lambda t, keys: _hashed_gram_side(t, keys)) if hashed
-            else (lambda t, keys: t))
-    uni = unigram.filter(F.col("term") != OOV_TERM)
-    u3 = F.broadcast(uni.select(
-        F.col("term").alias("_cur"),
-        F.col("logp1_4").alias("_u3lp1")))
-    u2 = F.broadcast(uni.select(
-        F.col("term").alias("_prev1"),
-        F.lit(True).alias("_u2inv"),
-        F.col("logg2_4").alias("_u2g2")))
-    u1 = F.broadcast(uni.select(
-        F.col("term").alias("_prev2"),
-        F.lit(True).alias("_u1inv")))
-    rows = (
-        _stream_chain_rows(df, text_col, depth=2)
-        .join(u3, on="_cur", how="left")
-        .join(u2, on="_prev1", how="left")
-        .join(u1, on="_prev2", how="left")
-    )
-    skip = F.col("_cur").isNull() | (F.col("_cur") == "")
-    scored_rows = rows.select(
-        *_thin_carry(df, id_col),
-        skip.alias("_skip"),
-        F.when(F.col("_u3lp1").isNotNull(), key(F.col("_cur")))
-        .otherwise(oov_key).alias("w3"),
-        F.when(F.col("_prev1").isNull(), null_key)
-        .when(F.col("_u2inv"), key(F.col("_prev1")))
-        .otherwise(oov_key).alias("w2"),
-        F.when(F.col("_prev2").isNull(), null_key)
-        .when(F.col("_u1inv"), key(F.col("_prev2")))
-        .otherwise(oov_key).alias("w1"),
-        F.coalesce(F.col("_u3lp1"), F.lit(oov_lp1)).alias("_lp1"),
-        F.when(F.col("_prev1").isNull(), F.lit(None).cast("long"))
-        .when(F.col("_u2inv"), F.col("_u2g2"))
-        .otherwise(F.lit(oov_g2).cast("long")).alias("_g2_prev"),
-    )
-    joined = (
-        scored_rows
-        .join(side(bigram, ("w2", "w3")), on=["w2", "w3"], how="left")
-        .join(side(context, ("w1", "w2")), on=["w1", "w2"], how="left")
-        .join(side(trigram, ("w1", "w2", "w3")),
-              on=["w1", "w2", "w3"], how="left")
-    )
-    score2 = F.coalesce(
-        F.col("logp2_4"),
-        F.col("_g2_prev") + F.col("_lp1"),
-        F.col("_lp1"),
-    )
-    contrib = (
-        F.when(F.col("_skip"), F.lit(0))
-        .when(F.col("w2").isNull(), F.col("_lp1"))
-        .when(F.col("w1").isNull(), score2)
-        .otherwise(F.coalesce(
-            F.col("logp3_4"),
-            F.col("logg12_4") + score2,
-            score2,
-        ))
-    )
-    prepared = joined.select(
-        *df.columns,
-        contrib.cast("long").alias("_c4"),
-        F.when(F.col("_skip"), F.lit(0)).otherwise(F.lit(1))
-        .cast("long").alias("_tok"),
-    )
-    return _doc_sum_stream(prepared, df, id_col, "lm3",
-                           round(oov_lp1 / 10_000.0, 4))
+    (parity-pinned).  Scale shape: the shared scoring chain
+    :func:`_score_chain` at order 3, differing from batch in two places:
+    per-row element_at n-gram extraction (no window) with THREE
+    broadcast joins against the (vocab+1)-row unigram side (current,
+    previous and previous-previous token), and the micro-batch-local
+    :func:`_doc_sum_stream` fold.  The three stream-static left
+    equi-joins against the unbounded observed-gram sides are the batch
+    scorer's joins (the landed-model sides from :func:`load_lm` drop in
+    directly).  No lag window, no state store, no watermark: append-mode
+    safe.  Works identically on a plain batch frame (the stream-twin
+    convention)."""
+    return _score_chain(df, (unigram, bigram, trigram, context),
+                        "kn_trigram", "kn_trigram_score_documents_stream",
+                        stream=True, text_col=text_col, id_col=id_col)
 
 
 def kn5_score_documents_stream(
@@ -950,114 +946,19 @@ def kn5_score_documents_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """:func:`kn5_score_documents` as a streaming-legal plan — the
-    :func:`kn_trigram_score_documents_stream` shape two orders taller:
-    per-row element_at n-gram extraction to depth 4, FIVE broadcast
-    joins against the (vocab+1)-row unigram side (current + four
-    previous tokens), seven stream-static left equi-joins against the
-    observed-gram/gamma sides, and the micro-batch-local
-    :func:`_doc_sum_stream` fold.  Scores BIT-IDENTICAL to batch
+    """:func:`kn5_score_documents` as a streaming-legal plan.  Scale
+    shape: the shared scoring chain :func:`_score_chain` at order 5,
+    differing from batch in two places: per-row element_at n-gram
+    extraction to depth 4 with FIVE broadcast joins against the
+    (vocab+1)-row unigram side (current + four previous tokens), and
+    the micro-batch-local :func:`_doc_sum_stream` fold.  The seven
+    stream-static left equi-joins against the observed-gram/gamma sides
+    are the batch scorer's.  Scores BIT-IDENTICAL to batch
     (parity-pinned); no window, no state store, append-mode safe."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("kn5_score_documents_stream: unigram frame has "
-                         "no OOV row — build the model with train_kn5_lm")
-    oov_lp1 = int(oov_row.logp1_4)
-    oov_g2 = oov_row.logg2_4
-
-    _guard_reserved(df, _STREAM_RESERVED, "kn5_score_documents_stream")
-    # ladder keys as xxhash64 longs (r18, guide §2.3) — see
-    # kn5_score_documents; collision-checked, string fallback
-    hashed = _gram_hash_injective(unigram)
-    key = (lambda c: F.xxhash64(c)) if hashed else (lambda c: c)
-    null_key = F.lit(None).cast("long" if hashed else "string")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    side = ((lambda t, keys: _hashed_gram_side(t, keys)) if hashed
-            else (lambda t, keys: t))
-    uni = unigram.filter(F.col("term") != OOV_TERM)
-    u_cur = F.broadcast(uni.select(
-        F.col("term").alias("_cur"),
-        F.col("logp1_4").alias("_uclp1")))
-    u_p1 = F.broadcast(uni.select(
-        F.col("term").alias("_prev1"),
-        F.lit(True).alias("_p1inv"),
-        F.col("logg2_4").alias("_p1g2")))
-    prev_maps = [F.broadcast(uni.select(
-        F.col("term").alias(f"_prev{k}"),
-        F.lit(True).alias(f"_p{k}inv"))) for k in (2, 3, 4)]
-    rows = (
-        _stream_chain_rows(df, text_col, depth=4)
-        .join(u_cur, on="_cur", how="left")
-        .join(u_p1, on="_prev1", how="left")
-    )
-    for k, m in zip((2, 3, 4), prev_maps):
-        rows = rows.join(m, on=f"_prev{k}", how="left")
-
-    def _mapped(k: int):
-        return (F.when(F.col(f"_prev{k}").isNull(), null_key)
-                .when(F.col(f"_p{k}inv"), key(F.col(f"_prev{k}")))
-                .otherwise(oov_key))
-
-    skip = F.col("_cur").isNull() | (F.col("_cur") == "")
-    scored_rows = rows.select(
-        *_thin_carry(df, id_col),
-        skip.alias("_skip"),
-        F.when(F.col("_uclp1").isNotNull(), key(F.col("_cur")))
-        .otherwise(oov_key).alias("w5"),
-        _mapped(1).alias("w4"),
-        _mapped(2).alias("w3"),
-        _mapped(3).alias("w2"),
-        _mapped(4).alias("w1"),
-        F.coalesce(F.col("_uclp1"), F.lit(oov_lp1)).alias("_lp1"),
-        F.when(F.col("_prev1").isNull(), F.lit(None).cast("long"))
-        .when(F.col("_p1inv"), F.col("_p1g2"))
-        .otherwise(F.lit(oov_g2).cast("long")).alias("_g2_prev"),
-    )
-    joined = (
-        scored_rows
-        .join(side(bigram, ("w4", "w5")), on=["w4", "w5"], how="left")
-        .join(side(context3, ("w3", "w4")), on=["w3", "w4"], how="left")
-        .join(side(trigram, ("w3", "w4", "w5")),
-              on=["w3", "w4", "w5"], how="left")
-        .join(side(context4, ("w2", "w3", "w4")),
-              on=["w2", "w3", "w4"], how="left")
-        .join(side(fourgram, ("w2", "w3", "w4", "w5")),
-              on=["w2", "w3", "w4", "w5"], how="left")
-        .join(side(context5, ("w1", "w2", "w3", "w4")),
-              on=["w1", "w2", "w3", "w4"], how="left")
-        .join(side(fivegram, ("w1", "w2", "w3", "w4", "w5")),
-              on=["w1", "w2", "w3", "w4", "w5"], how="left")
-    )
-    score2 = F.coalesce(
-        F.col("logp2_4"),
-        F.col("_g2_prev") + F.col("_lp1"),
-        F.col("_lp1"),
-    )
-    score3 = F.coalesce(
-        F.col("logp3_4"), F.col("logg3_4") + score2, score2)
-    score4 = F.coalesce(
-        F.col("logp4_4"), F.col("logg4_4") + score3, score3)
-    contrib = (
-        F.when(F.col("_skip"), F.lit(0))
-        .when(F.col("w4").isNull(), F.col("_lp1"))
-        .when(F.col("w3").isNull(), score2)
-        .when(F.col("w2").isNull(), score3)
-        .when(F.col("w1").isNull(), score4)
-        .otherwise(F.coalesce(
-            F.col("logp5_4"),
-            F.col("logg5_4") + score4,
-            score4,
-        ))
-    )
-    prepared = joined.select(
-        *df.columns,
-        contrib.cast("long").alias("_c4"),
-        F.when(F.col("_skip"), F.lit(0)).otherwise(F.lit(1))
-        .cast("long").alias("_tok"),
-    )
-    return _doc_sum_stream(prepared, df, id_col, "lm5",
-                           round(oov_lp1 / 10_000.0, 4))
+    return _score_chain(df, (unigram, bigram, trigram, context3, fourgram,
+                             context4, fivegram, context5),
+                        "kn_5gram", "kn5_score_documents_stream",
+                        stream=True, text_col=text_col, id_col=id_col)
 
 
 def train_kn_trigram_lm(
@@ -1473,104 +1374,22 @@ def kn5_score_documents(
         score4  = coalesce(logp4_4, logg4_4 + score3, score3)
         contrib = coalesce(logp5_4, logg5_4 + score4, score4)
 
-    Scale shape: tokenize -> ONE broadcast join against the
-    (vocab+1)-row unigram side -> one id-partitioned lag window ->
-    SEVEN left equi-joins against the observed-gram/gamma sides
-    (shuffled on their keys, AQE-broadcast when small; never
-    collected) -> map-side-combined integer sum per doc.  Ladder keys
-    are xxhash64 LONGS (r18, guide §2.3 — collision-checked per call,
-    string fallback; see :func:`_gram_hash_injective`), so the lag
-    window and every gram join shuffle fixed-width keys instead of
-    term strings; join matches, hence scores, are bit-identical."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("kn5_score_documents: unigram frame has no OOV "
-                         "row — build the model with train_kn5_lm")
-    oov_lp1 = int(oov_row.logp1_4)
-    oov_g2 = oov_row.logg2_4  # may be None: OOV never observed as w4
-
-    from pyspark.sql import Window
-
-    hashed = _gram_hash_injective(unigram)
-    term_key = F.xxhash64(F.col("term")) if hashed else F.col("term")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    side = ((lambda t, keys: _hashed_gram_side(t, keys)) if hashed
-            else (lambda t, keys: t))
-    seq = (
-        _pos_tokens(df, text_col, id_col)
-        .join(F.broadcast(unigram.filter(F.col("term") != OOV_TERM)),
-              on="term", how="left")
-        .select(
-            "_id", "_pos",
-            F.when(F.col("logp1_4").isNotNull(), term_key)
-            .otherwise(oov_key).alias("w5"),
-            F.coalesce(F.col("logp1_4"), F.lit(oov_lp1)).alias("_lp1"),
-            F.when(F.col("logp1_4").isNotNull(), F.col("logg2_4"))
-            .otherwise(F.lit(oov_g2).cast("long")).alias("_g2"),
-        )
-    )
-    w = Window.partitionBy("_id").orderBy("_pos")
-    chained = seq.select(
-        "_id", "w5", "_lp1",
-        F.lag("w5", 1).over(w).alias("w4"),
-        F.lag("w5", 2).over(w).alias("w3"),
-        F.lag("w5", 3).over(w).alias("w2"),
-        F.lag("w5", 4).over(w).alias("w1"),
-        F.lag("_g2", 1).over(w).alias("_g2_prev"),
-    )
-    joined = (
-        chained
-        .join(side(bigram, ("w4", "w5")), on=["w4", "w5"], how="left")
-        .join(side(context3, ("w3", "w4")), on=["w3", "w4"], how="left")
-        .join(side(trigram, ("w3", "w4", "w5")),
-              on=["w3", "w4", "w5"], how="left")
-        .join(side(context4, ("w2", "w3", "w4")),
-              on=["w2", "w3", "w4"], how="left")
-        .join(side(fourgram, ("w2", "w3", "w4", "w5")),
-              on=["w2", "w3", "w4", "w5"], how="left")
-        .join(side(context5, ("w1", "w2", "w3", "w4")),
-              on=["w1", "w2", "w3", "w4"], how="left")
-        .join(side(fivegram, ("w1", "w2", "w3", "w4", "w5")),
-              on=["w1", "w2", "w3", "w4", "w5"], how="left")
-    )
-    score2 = F.coalesce(
-        F.col("logp2_4"),
-        F.col("_g2_prev") + F.col("_lp1"),
-        F.col("_lp1"),
-    )
-    score3 = F.coalesce(
-        F.col("logp3_4"), F.col("logg3_4") + score2, score2)
-    score4 = F.coalesce(
-        F.col("logp4_4"), F.col("logg4_4") + score3, score3)
-    contrib = (
-        F.when(F.col("w4").isNull(), F.col("_lp1"))
-        .when(F.col("w3").isNull(), score2)
-        .when(F.col("w2").isNull(), score3)
-        .when(F.col("w1").isNull(), score4)
-        .otherwise(F.coalesce(
-            F.col("logp5_4"),
-            F.col("logg5_4") + score4,
-            score4,
-        ))
-    )
-    per = (
-        joined.groupBy("_id")
-        .agg(F.sum(contrib).alias("_s4"), F.count(F.lit(1)).alias("_n"))
-        .withColumnRenamed("_id", id_col)
-    )
-    floor = round(oov_lp1 / 10_000.0, 4)
-    return df.join(per, on=id_col, how="left").select(
-        *df.columns,
-        F.coalesce(
-            F.round(F.col("_s4") / F.lit(10_000.0) / F.col("_n"), 4),
-            F.lit(floor),
-        ).alias("lm5_logprob"),
-        F.coalesce(F.col("_s4"), F.lit(0)).cast("long")
-        .alias("lm5_logprob4_sum"),
-        F.coalesce(F.col("_n"), F.lit(0)).cast("long")
-        .alias("n_scored_tokens"),
-    )
+    Scale shape: the shared scoring chain :func:`_score_chain` at order
+    5.  Tokenize -> ONE broadcast join against the (vocab+1)-row
+    unigram side -> the four previous tokens from one id-partitioned lag
+    window -> SEVEN left equi-joins against the observed-gram/gamma
+    sides (shuffled on their keys, AQE-broadcast when small; never
+    collected) -> map-side-combined integer sum per doc, joined back.
+    The window and the groupBy/join-back are where this form differs
+    from :func:`kn5_score_documents_stream`.  Ladder keys are xxhash64
+    LONGS (r18, guide §2.3 — collision-checked per call, string
+    fallback; see :func:`_gram_hash_injective`), so the lag window and
+    every gram join shuffle fixed-width keys instead of term strings;
+    join matches, hence scores, are bit-identical."""
+    return _score_chain(df, (unigram, bigram, trigram, context3, fourgram,
+                             context4, fivegram, context5),
+                        "kn_5gram", "kn5_score_documents", stream=False,
+                        text_col=text_col, id_col=id_col)
 
 
 def kn_trigram_score_documents(
@@ -1597,86 +1416,16 @@ def kn_trigram_score_documents(
         score2  = coalesce(logp2_4, g2(w2) + logp1_4, logp1_4)
         contrib = coalesce(logp3_4, logg12_4 + score2, score2)
 
-    Scale shape: tokenize -> ONE broadcast join against the
-    (vocab+1)-row unigram side (OOV mapping + unigram scores + gammas in
-    a single pass) -> one id-partitioned lag window (the shingling
-    shuffle) -> THREE left equi-joins against the observed-gram sides
-    (shuffled on their keys, AQE-broadcast when small; never collected)
-    -> map-side-combined integer sum per doc.  Ladder keys are xxhash64
-    LONGS (r18, guide §2.3 — collision-checked per call, string
-    fallback), so the lag window and gram joins shuffle fixed-width
-    keys; matches, hence scores, are bit-identical."""
-    oov_row = unigram.filter(F.col("term") == OOV_TERM).first()
-    if oov_row is None:
-        raise ValueError("kn_trigram_score_documents: unigram frame has "
-                         "no OOV row — build the model with "
-                         "train_kn_trigram_lm")
-    oov_lp1 = int(oov_row.logp1_4)
-    oov_g2 = oov_row.logg2_4  # may be None: OOV never observed as context
-
-    from pyspark.sql import Window
-
-    hashed = _gram_hash_injective(unigram)
-    term_key = F.xxhash64(F.col("term")) if hashed else F.col("term")
-    oov_key = (F.xxhash64(F.lit(OOV_TERM)) if hashed
-               else F.lit(OOV_TERM))
-    side = ((lambda t, keys: _hashed_gram_side(t, keys)) if hashed
-            else (lambda t, keys: t))
-    seq = (
-        _pos_tokens(df, text_col, id_col)
-        .join(F.broadcast(unigram.filter(F.col("term") != OOV_TERM)),
-              on="term", how="left")
-        .select(
-            "_id", "_pos",
-            F.when(F.col("logp1_4").isNotNull(), term_key)
-            .otherwise(oov_key).alias("w3"),
-            F.coalesce(F.col("logp1_4"), F.lit(oov_lp1)).alias("_lp1"),
-            F.when(F.col("logp1_4").isNotNull(), F.col("logg2_4"))
-            .otherwise(F.lit(oov_g2).cast("long")).alias("_g2"),
-        )
-    )
-    w = Window.partitionBy("_id").orderBy("_pos")
-    chained = seq.select(
-        "_id", "w3", "_lp1",
-        F.lag("w3", 1).over(w).alias("w2"),
-        F.lag("w3", 2).over(w).alias("w1"),
-        F.lag("_g2", 1).over(w).alias("_g2_prev"),
-    )
-    joined = (
-        chained
-        .join(side(bigram, ("w2", "w3")), on=["w2", "w3"], how="left")
-        .join(side(context, ("w1", "w2")), on=["w1", "w2"], how="left")
-        .join(side(trigram, ("w1", "w2", "w3")),
-              on=["w1", "w2", "w3"], how="left")
-    )
-    score2 = F.coalesce(
-        F.col("logp2_4"),
-        F.col("_g2_prev") + F.col("_lp1"),
-        F.col("_lp1"),
-    )
-    contrib = (
-        F.when(F.col("w2").isNull(), F.col("_lp1"))
-        .when(F.col("w1").isNull(), score2)
-        .otherwise(F.coalesce(
-            F.col("logp3_4"),
-            F.col("logg12_4") + score2,
-            score2,
-        ))
-    )
-    per = (
-        joined.groupBy("_id")
-        .agg(F.sum(contrib).alias("_s4"), F.count(F.lit(1)).alias("_n"))
-        .withColumnRenamed("_id", id_col)
-    )
-    floor = round(oov_lp1 / 10_000.0, 4)
-    return df.join(per, on=id_col, how="left").select(
-        *df.columns,
-        F.coalesce(
-            F.round(F.col("_s4") / F.lit(10_000.0) / F.col("_n"), 4),
-            F.lit(floor),
-        ).alias("lm3_logprob"),
-        F.coalesce(F.col("_s4"), F.lit(0)).cast("long")
-        .alias("lm3_logprob4_sum"),
-        F.coalesce(F.col("_n"), F.lit(0)).cast("long")
-        .alias("n_scored_tokens"),
-    )
+    Scale shape: the shared scoring chain :func:`_score_chain` — the
+    :func:`kn5_score_documents` ladder at order 3.  Tokenize -> ONE
+    broadcast join against the (vocab+1)-row unigram side (OOV mapping +
+    unigram scores + gammas in a single pass) -> the two previous tokens
+    from one id-partitioned lag window (the shingling shuffle) -> THREE
+    left equi-joins against the observed-gram sides (shuffled on their
+    keys, AQE-broadcast when small; never collected) -> map-side-combined
+    integer sum per doc, joined back.  The window and the
+    groupBy/join-back are where this form differs from
+    :func:`kn_trigram_score_documents_stream`."""
+    return _score_chain(df, (unigram, bigram, trigram, context),
+                        "kn_trigram", "kn_trigram_score_documents",
+                        stream=False, text_col=text_col, id_col=id_col)

@@ -6142,16 +6142,13 @@ def ext_curate_stream_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ext_diversity_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stateless (ingest) form of per-document distinct-n diversity —
-    one Arrow struct kernel instead of the batch lead windows — under the
-    SAME full DuckDB replay as ext_diversity_stats, which also pins
-    batch/stream equality by transitivity
-    (condenser_spark/streaming/textdedup.py:diversity_stats_stateless).
+    """Per-document distinct-n diversity under its stream name — the same
+    per-row body as ext_diversity_stats, exported for ingest gating —
+    under the SAME full DuckDB replay
+    (condenser_spark/functions/text.py:diversity_stats_stateless).
     Registered past the driver's 50-slot cap; verified per-pytest by
     tests/test_overflow_oracles.py."""
-    from condenser_spark.streaming.textdedup import (
-        diversity_stats_stateless,
-    )
+    from condenser_spark.functions.text import diversity_stats_stateless
 
     return diversity_stats_stateless(_tables(spark, sf_dir)["documents"])
 
@@ -7403,16 +7400,13 @@ def ext_fineweb_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @golden("ext_fineweb_flags_stream", _FINEWEB_SQL)
 def ext_fineweb_flags_stream(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    """The stateless (ingest) form of the FineWeb custom filters — one
-    Arrow kernel of per-row line Counters instead of the batch explode
-    aggregate — under the SAME full DuckDB replay as ext_fineweb_flags,
-    which also pins batch/stream equality by transitivity
-    (condenser_spark/streaming/textdedup.py:fineweb_quality_stateless).
+    """The FineWeb custom filters under their stream name — the same
+    per-row body as ext_fineweb_flags, exported for ingest gating — under
+    the SAME full DuckDB replay
+    (condenser_spark/functions/text.py:fineweb_quality_stateless).
     Registered past the driver's 50-slot cap; verified per-pytest by
     tests/test_overflow_oracles.py."""
-    from condenser_spark.streaming.textdedup import (
-        fineweb_quality_stateless,
-    )
+    from condenser_spark.functions.text import fineweb_quality_stateless
 
     docs = _tables(spark, sf_dir)["documents"]
     listing = ("\nitem one\nitem two\nitem three\nitem four"

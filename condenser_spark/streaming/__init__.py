@@ -26,10 +26,12 @@ from condenser_spark.streaming.textdedup import (
     build_kgram_bloom,
     build_line_bloom,
     dedup_lines_stream,
-    diversity_stats_stateless,
     exact_substring_stream,
-    fineweb_quality_stateless,
     gopher_repetition_stateless,
+)
+from condenser_spark.functions.text import (
+    diversity_stats_stateless,
+    fineweb_quality_stateless,
 )
 
 __all__ = [

@@ -45,6 +45,11 @@ Both twins are STATELESS (no watermark, append-safe, trivial restart) and
 mirror the batch output contract exactly — (id, text, n_* audit columns) —
 so parity with the batch operator over (landed UNION stream) restricted to
 stream ids is pinned per-pytest (tests/test_textdedup_stream.py).
+
+The module also holds :func:`gopher_repetition_stateless`, the complete
+12-rule Gopher repetition table in one Arrow kernel per row; it keeps its
+own body because the batch :func:`functions.text.gopher_repetition_flags`
+computes a different (7-rule, SQL-native) table.
 """
 
 from __future__ import annotations
@@ -65,7 +70,6 @@ __all__ = [
     "build_kgram_bloom",
     "build_line_bloom",
     "dedup_lines_stream",
-    "diversity_stats_stateless",
     "exact_substring_stream",
     "gopher_repetition_stateless",
 ]
@@ -464,181 +468,6 @@ def exact_substring_stream(
         F.col("_r.n_removed_tokens").alias("n_removed_tokens"),
         F.col("_r.n_removed_chars").alias("n_removed_chars"),
     )
-
-
-_DIV_STRUCT = ("n_tokens bigint, distinct_1 bigint, distinct_2 bigint, "
-               "distinct_3 bigint")
-
-
-def diversity_stats_stateless(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Stateless twin of :func:`functions.text.diversity_stats` (per-doc
-    distinct-1/2/3 of Li et al. 2016) — the batch form builds its n-gram
-    rows through `lead` windows (illegal on a stream); this one computes
-    the distinct counts per row in one Arrow kernel (python set over the
-    JVM-tokenized stream, O(L)) and derives the single-division ratios
-    JVM-side, so it gates degenerate/templated documents AT INGEST:
-    readStream -> diversity_stats_stateless -> filter(ratio_2 > t).
-    Output and semantics are IDENTICAL to the batch operator
-    (parity-pinned per-pytest; the batch DuckDB oracle replays this form
-    verbatim in goldens_ext.ext_diversity_stream).  ``keep_cols`` (the
-    c4_clean/gopher passthrough contract — default () keeps the oracle
-    surface unchanged) carries extra columns through for join-free
-    composition: streaming/curate.py's ``diversity=`` gate rides it."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    reserved = {"_id", "_r", "n_tokens",
-                "distinct_1", "distinct_2", "distinct_3",
-                "ratio_1", "ratio_2", "ratio_3"}
-    clash = sorted(reserved.intersection(keep_cols))
-    if clash:
-        # a passthrough column shadowing a stat column would make the
-        # output ambiguous and any downstream ratio filter resolve
-        # against the wrong one — fail loud instead
-        raise ValueError(
-            "keep_cols collide with diversity_stats output columns: "
-            f"{clash}; rename them before the stage"
-        )
-
-    def _kernel(raw):
-        nt, d1, d2, d3 = [], [], [], []
-        for ts in raw:
-            if ts is None:
-                ts = []
-            n = len(ts)
-            nt.append(n)
-            d1.append(len(set(ts)))
-            d2.append(len({(ts[i], ts[i + 1]) for i in range(n - 1)}))
-            d3.append(len({(ts[i], ts[i + 1], ts[i + 2])
-                           for i in range(n - 2)}))
-        return pd.DataFrame({"n_tokens": nt, "distinct_1": d1,
-                             "distinct_2": d2, "distinct_3": d3})
-
-    kernel = pandas_udf(_kernel, _DIV_STRUCT).asNondeterministic()
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    out = df.select(F.col(id_col).alias("_id"), *keep_cols,
-                    kernel(arr).alias("_r"))
-
-    def _ratio(d: str, n: int):
-        total = F.col(f"_r.n_tokens") - F.lit(n - 1)
-        return F.when(
-            total >= 1, F.col(f"_r.{d}").cast("double")
-            / total.cast("double"))
-
-    return out.select(
-        F.col("_id").alias(id_col),
-        *keep_cols,
-        F.col("_r.n_tokens").alias("n_tokens"),
-        *[F.col(f"_r.distinct_{n}").alias(f"distinct_{n}")
-          for n in (1, 2, 3)],
-        *[_ratio(f"distinct_{n}", n).alias(f"ratio_{n}")
-          for n in (1, 2, 3)],
-    )
-
-
-_FW_STRUCT = ("n_lines bigint, punct bigint, short bigint, "
-              "dupc bigint")
-
-
-def fineweb_quality_stateless(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: Sequence[str] = (),
-    min_line_punct_frac: float = 0.12,
-    max_short_line_frac: float = 0.67,
-    short_line_chars: int = 30,
-    max_dup_line_char_frac: float = 0.10,
-    terminal_punct: tuple = (".", "!", "?", '"'),
-) -> DataFrame:
-    """Stateless twin of :func:`functions.text.fineweb_quality_flags`
-    (the three custom FineWeb heuristics, Penedo 2024 §3.4) — the batch
-    form's per-line groupBy is illegal mid-stream; this one computes the
-    per-line counts per row in ONE Arrow kernel (a Counter over the
-    JVM-split lines, O(L)) and derives the identical rounded fractions
-    and flags JVM-side, so the batch DuckDB oracle replays it verbatim
-    (goldens_ext.ext_fineweb_flags_stream; batch/stream equality by
-    transitivity + a row-for-row parity pytest).  Gate templated/listing
-    pages AT INGEST: readStream -> fineweb_quality_stateless ->
-    filter(fineweb_pass).  ``keep_cols`` is the standard passthrough
-    contract (streaming/curate.py's ``fineweb=`` stage rides it)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    reserved = {"_id", "_r", "_dl", "n_lines", "line_punct_frac",
-                "short_line_frac", "dup_line_char_frac",
-                "ok_line_punct", "ok_short_lines", "ok_dup_line_chars",
-                "fineweb_pass"}
-    clash = sorted(reserved.intersection(keep_cols))
-    if clash:
-        raise ValueError(
-            "keep_cols collide with fineweb_quality output columns: "
-            f"{clash}; rename them before the stage")
-    punct = tuple(terminal_punct)
-    short_n = int(short_line_chars)
-
-    def _kernel(lines):
-        from collections import Counter
-
-        cols = {k: [] for k in ("n_lines", "punct", "short", "dupc")}
-        for ls in lines:
-            ls = list(ls) if ls is not None else []
-            c = Counter(ls)
-            cols["n_lines"].append(len(ls))
-            cols["punct"].append(
-                sum(1 for u in ls if u.endswith(punct)))
-            cols["short"].append(sum(1 for u in ls if len(u) < short_n))
-            cols["dupc"].append(
-                sum((k - 1) * len(u) for u, k in c.items() if k > 1))
-        return pd.DataFrame(cols)
-
-    kernel = pandas_udf(_kernel, _FW_STRUCT).asNondeterministic()
-    units = F.filter(
-        F.transform(F.split(F.col(text_col), "\n"),
-                    lambda u: F.trim(u)),
-        lambda u: u != "",
-    )
-    out = df.select(
-        F.col(id_col).alias("_id"), *keep_cols,
-        F.coalesce(F.length(F.col(text_col)).cast("long"),
-                   F.lit(0).cast("long")).alias("_dl"),
-        kernel(units).alias("_r"),
-    )
-
-    def _frac(num: str):
-        return F.round(
-            F.when(F.col("_r.n_lines") > 0,
-                   F.col(f"_r.{num}") / F.col("_r.n_lines"))
-            .otherwise(F.lit(0.0)), 4)
-
-    out = out.select(
-        F.col("_id").alias(id_col), *keep_cols,
-        F.col("_r.n_lines").alias("n_lines"),
-        _frac("punct").alias("line_punct_frac"),
-        _frac("short").alias("short_line_frac"),
-        F.round(
-            F.when(F.col("_dl") > 0, F.col("_r.dupc") / F.col("_dl"))
-            .otherwise(F.lit(0.0)), 4).alias("dup_line_char_frac"),
-    )
-    flags = {
-        "ok_line_punct": (F.col("n_lines") > 0)
-        & (F.col("line_punct_frac") >= min_line_punct_frac),
-        "ok_short_lines":
-            F.col("short_line_frac") <= max_short_line_frac,
-        "ok_dup_line_chars":
-            F.col("dup_line_char_frac") <= max_dup_line_char_frac,
-    }
-    for name, cond in flags.items():
-        out = out.withColumn(name, cond)
-    conj = F.lit(True)
-    for name in flags:
-        conj = conj & F.col(name)
-    return out.withColumn("fineweb_pass", conj)
 
 
 _REP_STRUCT = (

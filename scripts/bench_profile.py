@@ -8,8 +8,10 @@ Each NAME is an entry of ``bench.ENTRIES``.  The session is the bench's
 one untimed warm-up run, then the median of ``--runs`` runs of the same
 build and act.  For a DataFrame entry the line also counts the Exchange
 and Python-evaluation nodes of its ``explain("formatted")`` plan, which
-``--plans-dir`` writes to ``D/<name><S>.txt``.  A development tool; the
-bench does not run it.
+``--plans-dir`` writes to ``D/<name><S>.txt`` with the ids that differ
+between two captures of the same plan normalized (expression ids ``#N``,
+``plan_id=N``, ``RDD[N] at localCheckpoint``), so two capture directories
+compare with ``diff -r``.  A development tool; the bench does not run it.
 """
 
 from __future__ import annotations
@@ -31,11 +33,23 @@ PYTHON_NODES = re.compile(
     r"|FlatMapGroupsInPandas")
 
 
+# ids that differ between two captures of one plan: expression ids,
+# exchange plan ids, and the RDD id and call site of a checkpointed scan
+VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^\s,\]]+"), r"RDD[N] at \1"),
+)
+
+
 def formatted_plan(df: DataFrame) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    plan = buf.getvalue()
+    for pattern, repl in VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main(argv: list[str] | None = None) -> int:

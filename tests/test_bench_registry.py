@@ -10,6 +10,7 @@ reads the same registry, is driven once end to end.
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -54,6 +55,9 @@ def test_profile_script_times_an_entry_and_writes_its_plan(sf_dir, tmp_path):
     assert "exchanges=" in line and "python_nodes=" in line, line
     plan = (tmp_path / "exact_dedup_x.txt").read_text()
     assert "== Physical Plan ==" in plan
+    # ids that change between captures are normalized, so two capture
+    # directories compare with diff -r
+    assert "#N" in plan and not re.search(r"#\d", plan), plan
 
 
 def test_no_script_shadows_a_stdlib_module():

@@ -362,15 +362,16 @@ def test_script_gate_both_chains(spark, tmp_path):
 
 
 def test_fineweb_stage_and_parity(spark, tmp_path):
-    """The FineWeb ingest gate: stateless flags equal the batch
-    operator's row-for-row on crafted docs, the curate_stream stage
-    filters on the conjunction, and the chain runs identically on a
-    real stream."""
-    from condenser_spark.functions.text import fineweb_quality_flags
-    from condenser_spark.streaming.textdedup import (
+    """The FineWeb ingest gate: the stream name is the batch operator
+    itself, its statistics on crafted and edge rows are fixed, the
+    curate_stream stage filters on the conjunction, and the chain runs
+    identically on a real stream."""
+    from condenser_spark.functions.text import (
+        fineweb_quality_flags,
         fineweb_quality_stateless,
     )
 
+    assert fineweb_quality_stateless is fineweb_quality_flags
     prose = "\n".join(
         f"This is proper sentence number {i} with many decent words."
         for i in range(10))
@@ -379,13 +380,36 @@ def test_fineweb_stage_and_parity(spark, tmp_path):
            + "repeated nav line\n" * 5)
     docs = spark.createDataFrame(
         [(1, prose, "en"), (2, listing, "en"), (3, nav, "en"),
-         (4, "", "en"), (5, None, "en")], SCHEMA)
+         (4, "", "en"), (5, None, "en"), (6, "   \n  ", "en"),
+         (7, "word.", "en"), (8, "a single short line", "en"),
+         (9, "Same line here.\nSame line here.\nSame line here.", "en")],
+        SCHEMA)
 
-    batch = {r.doc_id: r.asDict()
-             for r in fineweb_quality_flags(docs).collect()}
-    stream = {r.doc_id: r.asDict()
-              for r in fineweb_quality_stateless(docs).collect()}
-    assert batch == stream
+    # (n_lines, line_punct_frac, short_line_frac, dup_line_char_frac,
+    #  ok_line_punct, ok_short_lines, ok_dup_line_chars, fineweb_pass)
+    no_lines = (0, 0.0, 0.0, 0.0, False, True, True, False)
+    want = {
+        1: (10, 1.0, 0.0, 0.0, True, True, True, True),
+        2: (10, 0.0, 1.0, 0.0, False, False, True, False),
+        3: (6, 0.1667, 0.8333, 0.4658, True, False, False, False),
+        4: no_lines, 5: no_lines, 6: no_lines,
+        7: (1, 1.0, 1.0, 0.0, True, False, True, False),
+        8: (1, 0.0, 1.0, 0.0, False, False, True, False),
+        # two repeats of a 15-char line over 47 chars
+        9: (3, 1.0, 1.0, 0.6383, True, False, False, False),
+    }
+    flagged = fineweb_quality_flags(docs)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in flagged.schema.fields] == [
+        ("doc_id", "bigint", True), ("n_lines", "bigint", False),
+        ("line_punct_frac", "double", True),
+        ("short_line_frac", "double", True),
+        ("dup_line_char_frac", "double", True),
+        ("ok_line_punct", "boolean", True),
+        ("ok_short_lines", "boolean", True),
+        ("ok_dup_line_chars", "boolean", True),
+        ("fineweb_pass", "boolean", True)]
+    assert {r[0]: tuple(r[1:]) for r in flagged.collect()} == want
 
     out = curate_stream(docs, fineweb=True)
     assert [r.doc_id for r in out.collect()] == [1]

@@ -827,3 +827,46 @@ def test_curate_corpus_c4_and_gopher_do_not_join_back(spark, source):
                            report=False, barrier=False)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan, plan
+
+
+def _final_nodes(plan: str, node: str) -> int:
+    """How many ``node`` operators the final adaptive plan holds."""
+    final = plan.split("+- == Initial Plan ==")[0]
+    return sum(line.lstrip(" :|+-").startswith(node + " ")
+               for line in final.splitlines())
+
+
+def test_diversity_and_fineweb_are_per_row(spark, source):
+    """diversity_stats and fineweb_quality_flags are one per-row body
+    each, serving batch and stream: no Exchange and no Window, so the
+    same call gates a stream at ingest."""
+    from condenser_spark.functions.text import (
+        diversity_stats,
+        fineweb_quality_flags,
+    )
+
+    docs = source["documents"].filter(F.col("doc_id") < 200)
+    for op in (diversity_stats, fineweb_quality_flags):
+        plan = _executed(op(docs))
+        assert "Exchange" not in plan, plan
+        assert _final_nodes(plan, "Window") == 0, plan
+
+
+def test_lm_chain_scorers_window_only_in_batch(spark, source):
+    """The bigram, KN-3 and KN-5 scorers share one scoring chain whose
+    two forms differ in how they read previous tokens: the batch form
+    keeps exactly one lag Window, the ``_stream`` form plans none."""
+    from condenser_spark.functions import lm
+
+    docs = source["documents"].filter(F.col("doc_id") < 200)
+    models = {
+        "bigram": lm.train_bigram_lm(docs, vocab_size=64),
+        "kn_trigram": lm.train_kn_trigram_lm(docs, vocab_size=64),
+        "kn5": lm.train_kn5_lm(docs, vocab_size=64),
+    }
+    for name, model in models.items():
+        model = tuple(t.localCheckpoint() for t in model)
+        batch = getattr(lm, f"{name}_score_documents")(docs, *model)
+        stream = getattr(lm, f"{name}_score_documents_stream")(docs, *model)
+        assert _final_nodes(_executed(batch), "Window") == 1, name
+        assert _final_nodes(_executed(stream), "Window") == 0, name

@@ -195,21 +195,42 @@ def test_substring_twin_empty_text(spark):
     assert out[2].text == "" and out[2].n_removed_tokens == 0
 
 
+#: diversity_stats' output schema, nullability included (the counts are
+#: never NULL; a ratio is NULL below its n-gram length)
+DIV_SCHEMA = [("doc_id", "bigint", True), ("n_tokens", "bigint", False),
+              ("distinct_1", "bigint", False),
+              ("distinct_2", "bigint", False),
+              ("distinct_3", "bigint", False), ("ratio_1", "double", True),
+              ("ratio_2", "double", True), ("ratio_3", "double", True)]
+
+
 def test_diversity_stateless_parity_and_stream(spark, tmp_path):
-    from condenser_spark.functions.text import diversity_stats
-    from condenser_spark.streaming.textdedup import (
+    """The stream name is the batch operator itself; its values on edge
+    rows (NULL, empty, whitespace-only, one token, one line, repeated
+    lines) are fixed, and a real stream gives the same rows."""
+    from condenser_spark.functions.text import (
+        diversity_stats,
         diversity_stats_stateless,
     )
 
+    assert diversity_stats_stateless is diversity_stats
     docs = spark.createDataFrame(
-        [(1, "a a b"), (2, "x y"), (3, ""), (4, "solo"),
-         (5, "p q r p q r p q")],
+        [(1, None), (2, ""), (3, "  \n\t "), (4, "solo"), (5, "a a b"),
+         (6, "p q r\np q r\np q")],
         SCHEMA)
-    cols = ["doc_id", "n_tokens", "distinct_1", "distinct_2",
-            "distinct_3", "ratio_1", "ratio_2", "ratio_3"]
-    got = _rows(diversity_stats_stateless(docs), cols)
-    want = _rows(diversity_stats(docs), cols)
-    assert got == want
+    cols = [c for c, _, _ in DIV_SCHEMA]
+    want = [
+        (1, 0, 0, 0, 0, None, None, None),
+        (2, 0, 0, 0, 0, None, None, None),
+        (3, 0, 0, 0, 0, None, None, None),
+        (4, 1, 1, 0, 0, 1.0, None, None),
+        (5, 3, 2, 2, 1, 2 / 3, 1.0, 1.0),
+        (6, 8, 3, 3, 3, 3 / 8, 3 / 7, 3 / 6),
+    ]
+    out = diversity_stats(docs)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in out.schema.fields] == DIV_SCHEMA
+    assert _rows(out, cols) == want
 
     src, out = str(tmp_path / "dsrc"), str(tmp_path / "dout")
     docs.write.parquet(src)
@@ -224,9 +245,7 @@ def test_diversity_stateless_parity_and_stream(spark, tmp_path):
 
 def test_diversity_stateless_keep_cols_collision_raises(spark):
     import pytest as _pytest
-    from condenser_spark.streaming.textdedup import (
-        diversity_stats_stateless,
-    )
+    from condenser_spark.functions.text import diversity_stats_stateless
 
     docs = spark.createDataFrame(
         [(1, "a b c", 7)], "doc_id long, text string, n_tokens long")
