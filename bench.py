@@ -73,7 +73,7 @@ from condenser_spark.functions import (
     urls,
 )
 from condenser_spark.registry import load_source_tables, lookup_df
-from condenser_spark.session import get_spark
+from condenser_spark.session import codegen_compile_count, get_spark
 from condenser_spark.streaming import textdedup
 from condenser_spark.streaming.curate import curate_stream
 from condenser_spark.streaming.sessionize import (
@@ -944,19 +944,23 @@ def _video_fp_pairs(c):
 entry("video_fp_pairs", _video_fp_pairs)
 
 
-def time_entry(ctx: BenchContext, name: str, runs: int = 3) -> list[float]:
-    """Sorted wall times of ``runs`` runs of entry ``name``, after one
-    untimed warm-up run (codegen + JIT for the plan shape, and the first
-    use of the prep the entry reads from ``ctx``)."""
+def time_entry(ctx: BenchContext, name: str,
+               runs: int = 3) -> list[tuple[float, int]]:
+    """``(wall s, codegen classes compiled)`` of each of ``runs`` runs of
+    entry ``name``, in run order, after one untimed warm-up run (codegen +
+    JIT for the plan shape, and the first use of the prep the entry reads
+    from ``ctx``)."""
     build, act = ENTRIES[name]
     samples = []
     for i in range(runs + 1):
+        c0 = codegen_compile_count(ctx.spark)
         t0 = time.time()
         act(build(ctx))
+        wall = time.time() - t0
         if i:
-            samples.append(time.time() - t0)
+            samples.append((wall, codegen_compile_count(ctx.spark) - c0))
     ctx.release()
-    return sorted(samples)
+    return samples
 
 
 def run_entries(spark):
@@ -967,7 +971,7 @@ def run_entries(spark):
     noise: dict[str, float] = {}
     try:
         for name in ENTRIES:
-            samples = time_entry(ctx, name)
+            samples = sorted(wall for wall, _ in time_entry(ctx, name))
             med = samples[len(samples) // 2]
             timings[name] = round(med, 3)
             # the measured noise floor a cross-round delta must clear before

@@ -6,9 +6,13 @@
 Each NAME is an entry of ``bench.ENTRIES``.  The session is the bench's
 (``bench.start_session``), and each entry is timed as the bench times it:
 one untimed warm-up run, then the median of ``--runs`` runs of the same
-build and act.  For a DataFrame entry the line also counts the Exchange
-and Python-evaluation nodes of its ``explain("formatted")`` plan, which
-``--plans-dir`` writes to ``D/<name><S>.txt`` with the ids that differ
+build and act.  Next to each timed run's wall time the line gives the
+classes Janino compiled during it (0 once the codegen cache holds the
+entry's plans).  For a DataFrame entry the line also counts the Exchange
+and Python-evaluation nodes of its ``explain("formatted")`` plan, once per
+node of the plan tree (the numbered detail blocks below the tree list each
+node again and are not counted).  ``--plans-dir`` writes that plan to
+``D/<name><S>.txt`` with the ids that differ
 between two captures of the same plan normalized (expression ids ``#N``,
 ``plan_id=N``, ``RDD[N] at localCheckpoint``), so two capture directories
 compare with ``diff -r``.  A development tool; the bench does not run it.
@@ -31,6 +35,9 @@ from pyspark.sql import DataFrame  # noqa: E402
 PYTHON_NODES = re.compile(
     r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
     r"|FlatMapGroupsInPandas")
+# a node line of a formatted plan's tree, e.g. ``   +- * Project (4)``; the
+# detail block of the same node opens ``(4) Project``
+TREE_NODE = re.compile(r"^[ :|+\-*]*(\w[\w ]*?) \((\d+)\)$", re.M)
 
 
 # ids that differ between two captures of one plan: expression ids,
@@ -50,6 +57,15 @@ def formatted_plan(df: DataFrame) -> str:
     for pattern, repl in VOLATILE:
         plan = pattern.sub(repl, plan)
     return plan
+
+
+def plan_shape(plan: str) -> tuple[int, int]:
+    """(Exchange nodes, Python-evaluation nodes) in a formatted plan's
+    trees, subquery trees included.  A node is counted once by its operator
+    id: the tree repeats a cached relation's subtree at every use."""
+    nodes = {op_id: name for name, op_id in TREE_NODE.findall(plan)}.values()
+    return (sum("Exchange" in n for n in nodes),
+            sum(bool(PYTHON_NODES.fullmatch(n)) for n in nodes))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -76,8 +92,9 @@ def main(argv: list[str] | None = None) -> int:
             shape = ""
             if isinstance(built, DataFrame):
                 plan = formatted_plan(built)
-                shape = (f"  exchanges={plan.count('Exchange')}"
-                         f" python_nodes={len(PYTHON_NODES.findall(plan))}")
+                exchanges, python_nodes = plan_shape(plan)
+                shape = (f"  exchanges={exchanges}"
+                         f" python_nodes={python_nodes}")
                 if args.plans_dir:
                     os.makedirs(args.plans_dir, exist_ok=True)
                     path = os.path.join(args.plans_dir,
@@ -85,10 +102,11 @@ def main(argv: list[str] | None = None) -> int:
                     with open(path, "w") as fh:
                         fh.write(plan)
                     shape += f" -> {path}"
-            samples = bench.time_entry(ctx, name, args.runs)
-            print(f"{name}: median {samples[len(samples) // 2]:.3f}s"
-                  f"  samples={[round(s, 3) for s in samples]}{shape}",
-                  flush=True)
+            runs = bench.time_entry(ctx, name, args.runs)
+            walls = sorted(wall for wall, _ in runs)
+            print(f"{name}: median {walls[len(walls) // 2]:.3f}s"
+                  f"  samples={[round(wall, 3) for wall, _ in runs]}"
+                  f" compiles={[n for _, n in runs]}{shape}", flush=True)
     finally:
         ctx.close()
         spark.stop()

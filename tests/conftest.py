@@ -61,3 +61,15 @@ def jobs_in_group(spark, group, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def codegen_compiles(spark, fn):
+    """``(fn(), classes Janino compiled while it ran)``, from Spark's
+    ``CodegenMetrics`` compile count; a class found in the codegen cache
+    compiles none.  The count is JVM-wide, so nothing else may run in the
+    session meanwhile."""
+    from condenser_spark.session import codegen_compile_count
+
+    before = codegen_compile_count(spark)
+    out = fn()
+    return out, codegen_compile_count(spark) - before

@@ -46,13 +46,22 @@ def test_every_entry_builds_and_plans(spark, sf_dir):
 def test_profile_script_times_an_entry_and_writes_its_plan(sf_dir, tmp_path):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "bench_profile.py"), "exact_dedup",
-         "--runs", "1", "--plans-dir", str(tmp_path), "--suffix", "_x"],
+        [sys.executable, str(REPO / "scripts" / "bench_profile.py"),
+         "exact_dedup", "diversity_stats", "--runs", "1",
+         "--plans-dir", str(tmp_path), "--suffix", "_x"],
         capture_output=True, text=True, env=env, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
-    line = proc.stdout.strip().splitlines()[-1]
-    assert line.startswith("exact_dedup: median "), line
-    assert "exchanges=" in line and "python_nodes=" in line, line
+    dedup_line, diversity_line = proc.stdout.strip().splitlines()[-2:]
+    assert dedup_line.startswith("exact_dedup: median "), dedup_line
+    # each timed run's wall time comes with its codegen compile count
+    assert re.search(r"samples=\[[\d.]+\] compiles=\[\d+\]", dedup_line), \
+        dedup_line
+    assert "exchanges=" in dedup_line and "python_nodes=" in dedup_line
+    # nodes are counted in the plan tree only, not again in the numbered
+    # detail blocks: diversity's one Arrow kernel is one node
+    assert diversity_line.startswith("diversity_stats: median "), \
+        diversity_line
+    assert "python_nodes=1 " in diversity_line, diversity_line
     plan = (tmp_path / "exact_dedup_x.txt").read_text()
     assert "== Physical Plan ==" in plan
     # ids that change between captures are normalized, so two capture
